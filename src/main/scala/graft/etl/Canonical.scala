@@ -1,20 +1,25 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.functions.Cleaning
 import AspepConfig._
 
 /** `combine_years` re-expressed Spark-first (reference
   * process_aspep/assets.py:270-333): per-year Excel parse (driver-side;
-  * files are KBs) -> header collapse -> canonical rename -> value
+  * files are KBs) -> header collapse -> canonical rename ->
+  * schema-widened cells of every year in one relation -> value
   * canonicalization + recode (executor-side column expressions) ->
-  * schema-widening union -> broadcast dimension join -> global sort.
+  * broadcast dimension join -> global sort.
   *
-  * Catalyst shape (SURVEY.md §3.2): one BroadcastExchange for the dim
-  * join, one range shuffle for the output sort; everything else is
-  * narrow projections under whole-stage codegen.
+  * Catalyst shape (SURVEY.md §3.2): one scan of one relation (one
+  * partition per year, no Union), one canonicalization projection, one
+  * BroadcastExchange for the dim join, one range shuffle for the output
+  * sort; everything else is narrow projections under whole-stage
+  * codegen. One relation rather than a DataFrame per year under a
+  * 22-way union: every union branch is analysed when built and runs its
+  * own scan and projection (measured in docs/PLANS.md).
   *
   * Documented divergences from the reference (SURVEY.md §7.4):
   *  - the reference's header slice (`df.iloc[header_end:]`,
@@ -28,10 +33,11 @@ import AspepConfig._
 object Canonical {
 
   /** Per-year driver-side parse + header normalization. Returns the
-    * canonical-named raw string cells for one year.
+    * canonical-named raw string cells for one year; throws if the year
+    * cannot be read (see [[checkNames]]).
     */
-  private[etl] def parseYear(path: String, year: Int): (Seq[String], Seq[Seq[String]]) =
-    layout(year) match {
+  private[etl] def parseYear(path: String, year: Int): (Seq[String], Seq[Seq[String]]) = {
+    val parsed = layout(year) match {
       case TidySheet(sheet) =>
         val rows = ExcelReader.read(path, Some(sheet))
         val rawHeader = rows.head.map(h => Option(h).getOrElse(""))
@@ -59,34 +65,64 @@ object Canonical {
         val data = data0.map(r => keep.map(c => if (c < r.length) r(c) else null))
         (names, data)
     }
+    checkNames(parsed._1)
+    parsed
+  }
 
-  /** One year as a DataFrame of canonical-named columns (all strings)
-    * plus the per-year `index` ordinal (assets.py:306 reset_index).
+  /** The parsed years as ONE DataFrame of canonical-named columns plus
+    * the per-year `index` ordinal (assets.py:306 reset_index) and
+    * `year`: every year's cells go into one Row relation (null where a
+    * year lacks a column, as `unionByName(allowMissingColumns)` fills)
+    * and the canonicalization projection is applied once. The relation
+    * keeps one partition per year, in the order given, which is the
+    * layout a per-year union had: the output sort's range sampler reads
+    * the same partition contents, and the derived stage's `avg`
+    * partials sum in the sorted partitions' order.
     */
-  private[etl] def yearDf(spark: SparkSession, path: String, year: Int): DataFrame = {
-    val (names, data) = parseYear(path, year)
-    val schema = StructType(StructField("index", LongType, nullable = false) +:
-      names.map(n => StructField(n, StringType, nullable = true)))
-    val rows = data.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(i.toLong +: r)
+  private[etl] def canonicalYears(spark: SparkSession,
+      years: Seq[(Int, (Seq[String], Seq[Seq[String]]))]): DataFrame = {
+    val metrics = metricCols.filter(m => years.exists(_._2._1.contains(m)))
+    val cells = Seq("state", "gov_function") ++ metrics
+    val schema = StructType(
+      Seq(StructField("index", LongType, nullable = false),
+        StructField("year", IntegerType, nullable = false)) ++
+        cells.map(n => StructField(n, StringType, nullable = true)))
+    val rowsByYear = years.map { case (year, (names, data)) =>
+      val at = cells.map(names.indexOf(_))
+      data.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(Seq[Any](i.toLong, year) ++ at.map(c => if (c < 0) null else r(c)))
+      }
     }
     val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+      spark.sparkContext.parallelize(rowsByYear, rowsByYear.size).flatMap(identity), schema)
 
     // X1 trim+case, J2 recode maps, X2+X3 numeric canonicalization, X8 year
     val stateLower = lower(trim(col("state")))
     val govLower = lower(trim(col("gov_function")))
-    val metricExprs = names.filter(metricCols.contains).map { m =>
-      Cleaning.cleanNumeric(col(m)).as(m)
-    }
     raw.select(
       Seq(col("index"),
         Cleaning.recode(stateLower, stateMap).as("state"),
         Cleaning.recode(govLower, govFunctionMap).as("gov_function")) ++
-        metricExprs :+
-        lit(year).as("year"): _*)
+        metrics.map(m => Cleaning.cleanNumeric(col(m)).as(m)) :+
+        col("year"): _*)
       .withColumn("state code", upper(col("state")))
   }
+
+  /** A parsed year must name each column the projection reads exactly
+    * once: a missing or doubled name (two headers renamed to one
+    * canonical metric) makes the year unreadable, and it is skipped.
+    */
+  private def checkNames(names: Seq[String]): Unit = {
+    val read = Seq("state", "gov_function") ++ names.filter(metricCols.contains)
+    read.distinct.foreach { n =>
+      val k = names.count(_ == n)
+      require(k == 1, if (k == 0) s"column '$n' missing" else s"column '$n' appears $k times")
+    }
+  }
+
+  /** One year as a DataFrame: the one-year case of [[canonicalYears]]. */
+  private[etl] def yearDf(spark: SparkSession, path: String, year: Int): DataFrame =
+    canonicalYears(spark, Seq(year -> parseYear(path, year)))
 
   /** The census-regions dimension (vendored CSV, 51 rows incl. DC, no
     * "US" row -> national rows join to NULLs; reference resources.py:12-16).
@@ -97,7 +133,7 @@ object Canonical {
     val lines = try src.getLines().toList finally src.close()
     val rows = lines.tail.map { l =>
       val p = l.split(",", -1)
-      org.apache.spark.sql.Row(p(0), p(1), p(2), p(3))
+      Row(p(0), p(1), p(2), p(3))
     }
     val schema = StructType(Seq(
       StructField("dim_state", StringType), StructField("state code", StringType),
@@ -105,16 +141,16 @@ object Canonical {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Full combine: union-widen all years, enrich, classify, sort. */
+  /** Full combine: widen all years into one relation, enrich, classify, sort. */
   def combineYears(spark: SparkSession, rawDir: String,
                    startYear: Int = StartYear, endYear: Int = EndYear): DataFrame = {
-    val perYear = (startYear until endYear).flatMap { y =>
+    val parsed = (startYear until endYear).flatMap { y =>
       val base = s"$rawDir/aspep_$y"
       val path = Seq(s"$base.xlsx", s"$base.xls").find(p => new java.io.File(p).exists())
       // per-year error isolation (assets.py:317-320): a bad year is
       // skipped, the run continues
       path.flatMap { p =>
-        try Some(yearDf(spark, p, y))
+        try Some(y -> parseYear(p, y))
         catch {
           case e: Exception =>
             System.err.println(s"[aspep] skipping year $y: ${e.getMessage}")
@@ -122,14 +158,13 @@ object Canonical {
         }
       }
     }
-    require(perYear.nonEmpty, s"no parseable workbooks in $rawDir")
-
-    // O2 schema-widening union (assets.py:313 concat semantics)
-    val unioned = perYear.reduce(_.unionByName(_, allowMissingColumns = true))
+    require(parsed.nonEmpty, s"no parseable workbooks in $rawDir")
+    // O2 schema widening (assets.py:313 concat semantics)
+    val widened = canonicalYears(spark, parsed)
 
     // J1 broadcast left join; dim State OVERWRITES state; US -> NULLs
     val dim = censusDim(spark)
-    val enriched = unioned
+    val enriched = widened
       .join(broadcast(dim), Seq("state code"), "left")
       .withColumn("state", col("dim_state"))
       .drop("dim_state")

@@ -11,14 +11,19 @@ import graft.functions.Cleaning.safeDiv
   * ranks for base metrics, directional ranks for every delta column.
   *
   * The reference loops over ~1,600 groups in Python; here both stages
-  * are native WindowExec: ONE shuffle on (state code, gov_function) for
-  * all 48 lag expressions (they share a single window spec), one
-  * shuffle on (year, gov_function) for all 120 rank expressions (same
-  * partition keys; each distinct order key adds a sort within the
-  * partition, not a new exchange). Semantics pinned by the reference:
+  * are native WindowExec, one shuffle each: ONE shuffle on (state code,
+  * gov_function) for all 48 lag expressions (they share a single
+  * window spec), and ONE partition-only window on (year, gov_function)
+  * for all 108 rank columns (12 stat columns x (1 base rank + 4 deltas
+  * x 2 directions)). That window collects each of the 60 stat/delta
+  * columns into a cohort array once; a rank is then a count over the
+  * array, so no rank adds a sort. The count is O(k^2) per cohort of k
+  * rows, and k is bounded: the states plus US, US-median and US-mean,
+  * about 54 per (year, gov_function). Semantics pinned by the reference:
   *  - "5yr" = lag 4 rows, positional not temporal (asset_checks.py:27);
-  *  - pandas rank(method="min") = SQL RANK(); NaN metric -> NaN rank
-  *    (null-masked, nulls sorted last so they never perturb ranks);
+  *  - pandas rank(method="min") = SQL RANK() = 1 + the number of
+  *    cohort values strictly ahead; a null metric gets a null rank and
+  *    never perturbs the others;
   *  - directional: positives ranked desc, negatives asc, others null;
   *  - pct_change implemented as plain lag ratio (the reference's
   *    deprecated pad-fill default forward-fills across null gaps; no
@@ -66,23 +71,35 @@ object ExtendedStats {
       .select(src.columns.map(c => col(s"`$c`")) ++ deltaExprs: _*)
       .drop(baseCols.map(c => s"__pad_$c"): _*)
 
-    // W3/W4: ranks within (year, gov_function)
+    // W3/W4: ranks within (year, gov_function), as counts. RANK()
+    // (pandas method="min") of a non-null x is 1 + the number of cohort
+    // values strictly ahead of x, so every rank column reads one
+    // cohort array: one collect_list per stat/delta column, all over
+    // ONE partition-only window (a single Window, no per-key sort).
+    // collect_list skips nulls; Spark's > and < order NaN above +inf
+    // and equate -0.0 with 0.0, exactly as the rank sort does.
     val cohort = Window.partitionBy(col("year"), col("gov_function"))
-    def rankDescNullsSkip(c: Column): Column =
-      when(c.isNotNull, rank().over(cohort.orderBy(c.desc_nulls_last)))
-    val baseRanks: Seq[Column] =
-      baseCols.map(c => rankDescNullsSkip(col(c)).as(s"${c}_rank"))
     val deltaCols = baseCols.flatMap(c => deltaSuffixes.map(s => s"$c$s"))
-    val dirRanks: Seq[Column] = deltaCols.flatMap { c =>
-      val pos = when(col(c) > 0, col(c))
-      val neg = when(col(c) < 0, col(c))
-      Seq(
-        when(pos.isNotNull, rank().over(cohort.orderBy(pos.desc_nulls_last)))
-          .as(s"${c}_pos_rank"),
-        when(neg.isNotNull, rank().over(cohort.orderBy(neg.asc_nulls_last)))
-          .as(s"${c}_neg_rank"))
+    val rankedCols = baseCols ++ deltaCols
+    def arr(c: String): String = s"__cohort_$c"
+    val withCohorts = withDeltas.select(
+      withDeltas.columns.map(c => col(s"`$c`")) ++
+        rankedCols.map(c => collect_list(col(c)).over(cohort).as(arr(c))): _*)
+    // 1 + count of cohort values v with ahead(v, x); the lambda captures
+    // only the attribute x (README "Expression hygiene")
+    def countRank(c: String, ahead: (Column, Column) => Column): Column =
+      size(filter(col(arr(c)), v => ahead(v, col(c)))) + 1
+    val baseRanks: Seq[Column] = baseCols.map { c =>
+      when(col(c).isNotNull, countRank(c, _ > _)).as(s"${c}_rank")
     }
-    val ranked = withDeltas.select(
+    // directional: positives ranked desc, negatives asc; a value ahead
+    // of a positive x is positive, one ahead of a negative x negative
+    val dirRanks: Seq[Column] = deltaCols.flatMap { c =>
+      Seq(
+        when(col(c) > 0, countRank(c, _ > _)).as(s"${c}_pos_rank"),
+        when(col(c) < 0, countRank(c, _ < _)).as(s"${c}_neg_rank"))
+    }
+    val ranked = withCohorts.select(
       withDeltas.columns.map(c => col(s"`$c`")) ++ baseRanks ++ dirRanks: _*)
 
     // F3 trivial-row filter: greatest(|numeric|) > 1 — year (>=2003) is

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.Cleaning
 import scala.util.Random
@@ -105,6 +106,46 @@ class RandomizedPropsSpec extends SparkTestBase {
       val expected = refRank(grp.map(_._3))
       grp.map(_._1).zip(expected).foreach { case (id, exp) =>
         assert(got(id) == exp, s"id $id: got ${got(id)}, want $exp")
+      }
+    }
+  }
+
+  test("ExtendedStats count ranks == rank().over on random cohorts with ties, nulls, NaN, ±0.0, ±∞") {
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new Random(23)
+    val pool: Seq[Option[Double]] = Seq(None, Some(Double.NaN), Some(0.0), Some(-0.0),
+      Some(Double.PositiveInfinity), Some(Double.NegativeInfinity)) ++
+      (-3 to 3).map(i => Some(i.toDouble)) // small range: many ties
+    def draw(): Option[Double] = pool(rnd.nextInt(pool.length))
+    val rows = for (s <- 0 until 9; f <- Seq("highways", "libraries"); y <- 2003 to 2008)
+      yield (s"S$s", f, y, draw(), draw())
+    val derived = rows.toDF("state code", "gov_function", "year", "ft_employment", "total_pay")
+    val ext = graft.etl.ExtendedStats.deriveExtendedStats(derived)
+
+    // reference: the sort-based form, one RANK() window per rank column
+    val cohort = Window.partitionBy("year", "gov_function")
+    def reference(rankCol: String): Column = {
+      val (src, dir) =
+        if (rankCol.endsWith("_pos_rank")) (rankCol.stripSuffix("_pos_rank"), "pos")
+        else if (rankCol.endsWith("_neg_rank")) (rankCol.stripSuffix("_neg_rank"), "neg")
+        else (rankCol.stripSuffix("_rank"), "base")
+      val x = col(src)
+      val (key, order) = dir match {
+        case "pos" => val k = when(x > 0, x); (k, k.desc_nulls_last)
+        case "neg" => val k = when(x < 0, x); (k, k.asc_nulls_last)
+        case _ => (x, x.desc_nulls_last)
+      }
+      when(key.isNotNull, rank().over(cohort.orderBy(order)))
+    }
+    val rankCols = ext.columns.filter(_.endsWith("_rank")).toSeq
+    assert(rankCols.length == 2 * 9) // 2 stat columns x (1 + 4 deltas x 2 directions)
+    val got = ext.select(rankCols.map(col) ++ rankCols.map(reference): _*).collect()
+    assert(got.length == rows.length)
+    val n = rankCols.length
+    got.foreach { r =>
+      rankCols.indices.foreach { i =>
+        val (a, b) = (r.get(i), r.get(i + n))
+        assert(a == b, s"${rankCols(i)}: count form $a, rank().over $b")
       }
     }
   }

@@ -29,7 +29,11 @@ class Aspep2024FixtureSpec extends AnyFunSuite {
     // never symlink a real 2024 workbook: the fixture write below
     // would follow the link and clobber the READ-ONLY reference file
     // the day one lands there (the synthesized fixture supersedes it)
-    refRaw.listFiles().filterNot(_.getName.startsWith("aspep_2024"))
+    // listFiles() is null when the directory is missing: fail (not
+    // cancel) with a message naming it
+    val refFiles = Option(refRaw.listFiles()).getOrElse(fail(
+      s"reference raw workbooks not found: ${refRaw.getPath} is missing or not a readable directory"))
+    refFiles.filterNot(_.getName.startsWith("aspep_2024"))
       .foreach { f =>
         java.nio.file.Files.createSymbolicLink(
           new java.io.File(dir, f.getName).toPath, f.toPath)

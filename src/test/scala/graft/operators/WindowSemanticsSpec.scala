@@ -51,6 +51,42 @@ class WindowSemanticsSpec extends SparkTestBase {
     assert(got(4).isNullAt(2))
   }
 
+  // W3/W4 through the production path: ExtendedStats on a hand-built
+  // derived frame (one cohort: year 2004, one gov_function)
+  private def extended(rows: Seq[(String, Int, Option[Double])]) =
+    graft.etl.ExtendedStats.deriveExtendedStats(
+      rows.map { case (s, y, v) => (s, "highways", y, v) }
+        .toDF("state code", "gov_function", "year", "ft_employment"))
+
+  private def ranks(rows: Seq[(String, Int, Option[Double])], rank: String): Seq[Option[Int]] =
+    extended(rows).filter($"year" === 2004).orderBy("state code")
+      .select(col(rank)).as[Option[Int]].collect().toSeq
+
+  test("W3 via ExtendedStats: min-tie rank with gaps — [9,9,7] -> [1,1,3]") {
+    val rows = Seq(("a", 2004, Some(9d)), ("b", 2004, Some(9d)), ("c", 2004, Some(7d)))
+    assert(ranks(rows, "ft_employment_rank") == Seq(Some(1), Some(1), Some(3)))
+  }
+
+  test("W3 via ExtendedStats: null metric gets null rank — [5,null,3] -> [1,null,2]") {
+    val rows = Seq(("a", 2004, Some(5d)), ("b", 2004, None), ("c", 2004, Some(3d)))
+    assert(ranks(rows, "ft_employment_rank") == Seq(Some(1), None, Some(2)))
+  }
+
+  test("W4 via ExtendedStats: directional ranks — 1yr deltas [+10,+2,0,-1,-8,null]") {
+    val deltas = Seq(Some(10d), Some(2d), Some(0d), Some(-1d), Some(-8d), None)
+    val rows = deltas.zipWithIndex.flatMap { case (d, i) =>
+      val s = ('a' + i).toChar.toString
+      Seq((s, 2003, Some(100d)), (s, 2004, d.map(100d + _)))
+    }
+    val got = extended(rows).filter($"year" === 2004).orderBy("state code")
+      .select($"ft_employment_1yr_abs").as[Option[Double]].collect().toSeq
+    assert(got == deltas)
+    assert(ranks(rows, "ft_employment_1yr_abs_pos_rank") ==
+      Seq(Some(1), Some(2), None, None, None, None))
+    assert(ranks(rows, "ft_employment_1yr_abs_neg_rank") ==
+      Seq(None, None, None, Some(2), Some(1), None))
+  }
+
   test("W1: '5yr' is lag 4 rows, positional not temporal") {
     // year gap: 2019 missing — lag-4 of 2024 lands on 2019's *slot*,
     // i.e. the 4th previous AVAILABLE row (2018 here)
