@@ -13,13 +13,19 @@ import AspepConfig._
   * canonicalization + recode (executor-side column expressions) ->
   * broadcast dimension join -> global sort.
   *
-  * Catalyst shape (SURVEY.md §3.2): one scan of one relation (one
-  * partition per year, no Union), one canonicalization projection, one
-  * BroadcastExchange for the dim join, one range shuffle for the output
-  * sort; everything else is narrow projections under whole-stage
-  * codegen. One relation rather than a DataFrame per year under a
-  * 22-way union: every union branch is analysed when built and runs its
-  * own scan and projection (measured in docs/PLANS.md).
+  * Catalyst shape (SURVEY.md §3.2): one scan of one single-partition
+  * relation (no Union), one canonicalization projection, one
+  * BroadcastExchange for the dim join, and the output sort over that
+  * one partition, with no exchange; everything else is narrow
+  * projections under whole-stage codegen. One relation rather than a
+  * DataFrame per year under a 22-way union: every union branch is
+  * analysed when built and runs its own scan and projection (measured
+  * in docs/PLANS.md). One partition because the panel is bounded
+  * (~41.5k rows for 22 years, ~2k more a year) and the driver-side
+  * parse already holds all of it: the sorted partition satisfies the
+  * clustered distributions of the derive `groupBy` and the extended
+  * windows, so no later stage shuffles, and every `US-mean` sums its
+  * cross-section in state order whatever the session did before.
   *
   * Documented divergences from the reference (SURVEY.md §7.4):
   *  - the reference's header slice (`df.iloc[header_end:]`,
@@ -71,13 +77,10 @@ object Canonical {
 
   /** The parsed years as ONE DataFrame of canonical-named columns plus
     * the per-year `index` ordinal (assets.py:306 reset_index) and
-    * `year`: every year's cells go into one Row relation (null where a
-    * year lacks a column, as `unionByName(allowMissingColumns)` fills)
-    * and the canonicalization projection is applied once. The relation
-    * keeps one partition per year, in the order given, which is the
-    * layout a per-year union had: the output sort's range sampler reads
-    * the same partition contents, and the derived stage's `avg`
-    * partials sum in the sorted partitions' order.
+    * `year`: every year's cells go into one single-partition Row
+    * relation (null where a year lacks a column, as
+    * `unionByName(allowMissingColumns)` fills) and the canonicalization
+    * projection is applied once.
     */
   private[etl] def canonicalYears(spark: SparkSession,
       years: Seq[(Int, (Seq[String], Seq[Seq[String]]))]): DataFrame = {
@@ -87,14 +90,13 @@ object Canonical {
       Seq(StructField("index", LongType, nullable = false),
         StructField("year", IntegerType, nullable = false)) ++
         cells.map(n => StructField(n, StringType, nullable = true)))
-    val rowsByYear = years.map { case (year, (names, data)) =>
+    val rows = years.flatMap { case (year, (names, data)) =>
       val at = cells.map(names.indexOf(_))
       data.zipWithIndex.map { case (r, i) =>
         Row.fromSeq(Seq[Any](i.toLong, year) ++ at.map(c => if (c < 0) null else r(c)))
       }
     }
-    val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(rowsByYear, rowsByYear.size).flatMap(identity), schema)
+    val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
     // X1 trim+case, J2 recode maps, X2+X3 numeric canonicalization, X8 year
     val stateLower = lower(trim(col("state")))
@@ -141,7 +143,9 @@ object Canonical {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Full combine: widen all years into one relation, enrich, classify, sort. */
+  /** Full combine: widen all years into one relation, enrich, classify,
+    * and sort as one partition (no range exchange, see the object doc).
+    */
   def combineYears(spark: SparkSession, rawDir: String,
                    startYear: Int = StartYear, endYear: Int = EndYear): DataFrame = {
     val parsed = (startYear until endYear).flatMap { y =>
@@ -172,11 +176,13 @@ object Canonical {
         when(col("`state code`") === "US", "national").otherwise("state"))
 
     // stable combined column order, then O1 global sort (assets.py:322)
+    // within one partition
     val ordered = Seq("index", "state", "gov_function") ++
       metricCols.filter(enriched.columns.contains) ++
       Seq("year", "state code", "region", "division", "state_scope")
     enriched
       .select(ordered.map(c => col(s"`$c`")): _*)
+      .coalesce(1)
       .orderBy(asc_nulls_last("state"), col("year"), col("gov_function"))
   }
 }

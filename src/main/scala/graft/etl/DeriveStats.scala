@@ -11,8 +11,12 @@ import graft.functions.Cleaning.safeDiv
   * Exact `median` (interpolated, null-skipping) is required — the
   * reference oracle is pandas' exact median under rel_tol 1e-3
   * (SURVEY.md §2.5 A1); percentile_approx would not survive it. The
-  * groupBy is one keyed shuffle on (year, gov_function), ~46 groups per
-  * year, each buffering <=52 values per column — bounded at any scale.
+  * groupBy is keyed on (year, gov_function), ~46 groups per year, each
+  * buffering <=52 values per column — bounded at any scale. Over the
+  * combine's single sorted partition it plans no exchange, and each
+  * `avg` sums its cross-section in state order (the sort order), so the
+  * `US-mean` rows are a function of the input alone; a multi-partition
+  * input gets one hash exchange and sums partials in arrival order.
   */
 object DeriveStats {
 

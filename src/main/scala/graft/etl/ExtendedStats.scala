@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Cleaning.safeDiv
+import graft.functions.CohortRank.cohortRank
 
 /** `derive_extended_stats` (reference process_aspep/assets.py:387-491):
   * per-(state code, gov_function) 1yr/5yr lag deltas for every stat
@@ -11,15 +12,19 @@ import graft.functions.Cleaning.safeDiv
   * ranks for base metrics, directional ranks for every delta column.
   *
   * The reference loops over ~1,600 groups in Python; here both stages
-  * are native WindowExec, one shuffle each: ONE shuffle on (state code,
-  * gov_function) for all 48 lag expressions (they share a single
-  * window spec), and ONE partition-only window on (year, gov_function)
-  * for all 108 rank columns (12 stat columns x (1 base rank + 4 deltas
-  * x 2 directions)). That window collects each of the 60 stat/delta
+  * are native WindowExec: ONE window on (state code, gov_function) for
+  * all 48 lag expressions (they share a single window spec), and ONE
+  * partition-only window on (year, gov_function) for all 108 rank
+  * columns (12 stat columns x (1 base rank + 4 deltas x 2 directions)).
+  * Over the combine's single sorted partition neither window needs an
+  * exchange (`SinglePartition` satisfies both clustered
+  * distributions); a multi-partition input gets one hash exchange per
+  * window. The cohort window collects each of the 60 stat/delta
   * columns into a cohort array once; a rank is then a count over the
-  * array, so no rank adds a sort. The count is O(k^2) per cohort of k
-  * rows, and k is bounded: the states plus US, US-median and US-mean,
-  * about 54 per (year, gov_function). Semantics pinned by the reference:
+  * array ([[graft.functions.CohortRank]], one codegen'd loop), so no
+  * rank adds a sort. The count is O(k^2) per cohort of k rows, and k is
+  * bounded: the states plus US, US-median and US-mean, about 54 per
+  * (year, gov_function). Semantics pinned by the reference:
   *  - "5yr" = lag 4 rows, positional not temporal (asset_checks.py:27);
   *  - pandas rank(method="min") = SQL RANK() = 1 + the number of
   *    cohort values strictly ahead; a null metric gets a null rank and
@@ -49,7 +54,7 @@ object ExtendedStats {
     val wFill = wLag.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // pad mode needs its own pass: a lag OF a window expression cannot
     // nest, so the forward-filled series becomes a real column first
-    // (same wLag partitioning -> still a single shuffle overall)
+    // (same wLag partitioning -> no extra exchange)
     val src =
       if (padPct)
         derived.select(derived.columns.map(c => col(s"`$c`")) ++
@@ -76,8 +81,8 @@ object ExtendedStats {
     // values strictly ahead of x, so every rank column reads one
     // cohort array: one collect_list per stat/delta column, all over
     // ONE partition-only window (a single Window, no per-key sort).
-    // collect_list skips nulls; Spark's > and < order NaN above +inf
-    // and equate -0.0 with 0.0, exactly as the rank sort does.
+    // collect_list skips nulls; CohortRank orders NaN above +inf and
+    // equates -0.0 with 0.0, exactly as the rank sort does.
     val cohort = Window.partitionBy(col("year"), col("gov_function"))
     val deltaCols = baseCols.flatMap(c => deltaSuffixes.map(s => s"$c$s"))
     val rankedCols = baseCols ++ deltaCols
@@ -85,19 +90,16 @@ object ExtendedStats {
     val withCohorts = withDeltas.select(
       withDeltas.columns.map(c => col(s"`$c`")) ++
         rankedCols.map(c => collect_list(col(c)).over(cohort).as(arr(c))): _*)
-    // 1 + count of cohort values v with ahead(v, x); the lambda captures
-    // only the attribute x (README "Expression hygiene")
-    def countRank(c: String, ahead: (Column, Column) => Column): Column =
-      size(filter(col(arr(c)), v => ahead(v, col(c)))) + 1
+    def countRank(c: String, desc: Boolean): Column = cohortRank(col(arr(c)), col(c), desc)
     val baseRanks: Seq[Column] = baseCols.map { c =>
-      when(col(c).isNotNull, countRank(c, _ > _)).as(s"${c}_rank")
+      when(col(c).isNotNull, countRank(c, desc = true)).as(s"${c}_rank")
     }
     // directional: positives ranked desc, negatives asc; a value ahead
     // of a positive x is positive, one ahead of a negative x negative
     val dirRanks: Seq[Column] = deltaCols.flatMap { c =>
       Seq(
-        when(col(c) > 0, countRank(c, _ > _)).as(s"${c}_pos_rank"),
-        when(col(c) < 0, countRank(c, _ < _)).as(s"${c}_neg_rank"))
+        when(col(c) > 0, countRank(c, desc = true)).as(s"${c}_pos_rank"),
+        when(col(c) < 0, countRank(c, desc = false)).as(s"${c}_neg_rank"))
     }
     val ranked = withCohorts.select(
       withDeltas.columns.map(c => col(s"`$c`")) ++ baseRanks ++ dirRanks: _*)

@@ -45,6 +45,11 @@ class ArtifactParitySpec extends AnyFunSuite {
     * ulp-level layout sensitivity itself is inherent to float sums;
     * semantic accuracy vs the reference is AspepGoldenSpec's rel_tol
     * job, not this pin's.
+    *
+    * Production now uses this layout too: `Canonical.combineYears`
+    * sorts the panel as one partition, and the derive and extended
+    * stages over it plan no exchange. The `coalesce(1)` and the
+    * isolated session stay, so the pin does not depend on that.
     */
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
