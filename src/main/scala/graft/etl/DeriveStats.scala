@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import graft.functions.Cleaning.safeDiv
 
 /** `derive_stats` (reference process_aspep/assets.py:336-385): ratio
@@ -17,6 +18,11 @@ import graft.functions.Cleaning.safeDiv
   * `avg` sums its cross-section in state order (the sort order), so the
   * `US-mean` rows are a function of the input alone; a multi-partition
   * input gets one hash exchange and sums partials in arrival order.
+  *
+  * A ratio input the combine lacks reads as a null double, as
+  * `Canonical` fills a column a year lacks: a combine with no legacy
+  * year has no `pt_hour`, so its `pay_per_pt_hour` is present and null
+  * (the ratio uses `pt_hour` only, never the 2024 `pt_hours`).
   */
 object DeriveStats {
 
@@ -32,11 +38,13 @@ object DeriveStats {
     *   checks are exact-median under rel_tol 1e-3 (SURVEY §7.4.7).
     */
   def deriveStats(combined: DataFrame, approxMedian: Boolean = false): DataFrame = {
+    def input(c: String): Column =
+      if (combined.columns.contains(c)) col(c) else lit(null).cast(DoubleType)
     // X4 safe ratios (assets.py:351-356: 0-divisor and inf -> null)
     val withRatios = combined
-      .withColumn("pay_per_fte", safeDiv(col("total_pay"), col("ft_eq_employment")))
-      .withColumn("pay_per_pt_hour", safeDiv(col("pt_pay"), col("pt_hour")))
-      .withColumn("pay_per_ft", safeDiv(col("ft_pay"), col("ft_employment")))
+      .withColumn("pay_per_fte", safeDiv(input("total_pay"), input("ft_eq_employment")))
+      .withColumn("pay_per_pt_hour", safeDiv(input("pt_pay"), input("pt_hour")))
+      .withColumn("pay_per_ft", safeDiv(input("ft_pay"), input("ft_employment")))
 
     // F2: cross-sections exclude the published national aggregate
     val stateRows = withRatios.filter(col("`state code`") =!= "US")
@@ -47,7 +55,7 @@ object DeriveStats {
       else sc.map(c => median(col(c)).as(c))
     val meanAggs = sc.map(c => avg(col(c)).as(c))
 
-    def statsRows(aggs: Seq[org.apache.spark.sql.Column], label: String) =
+    def statsRows(aggs: Seq[Column], label: String) =
       stateRows.groupBy(col("year"), col("gov_function"))
         .agg(aggs.head, aggs.tail: _*)
         .withColumn("state code", lit(label))

@@ -229,8 +229,9 @@ object XlsReader {
           val pos = le(r.data).getInt(0)
           val nameLen = r.data(6) & 0xFF
           val wide = (r.data(7) & 0x01) != 0
+          // compressed: one byte a character, U+0000-U+00FF
           val nm = if (wide) new String(r.data, 8, nameLen * 2, "UTF-16LE")
-          else new String(r.data.slice(8, 8 + nameLen).map(b => (b & 0xFF).toByte))
+          else new String(r.data, 8, nameLen, "ISO-8859-1")
           sheets += ((nm, pos))
         case 0x000A => inGlobals = false
         case _ => if (r.sid != 0x003C) collectingSst = false

@@ -12,6 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The 2024 workbook is not on disk (the reference downloads it at run
   * time; this environment has no egress), so the five 2024-dependent
   * tuples are excluded — 11 of 16 run.
+  *
+  * Every test cancels, naming the directory, where the reference raw
+  * directory (`rawDir`) is absent; AspepHermeticGoldenSpec checks
+  * the same stages over a synthesized raw directory.
   */
 class AspepGoldenSpec extends AnyFunSuite {
 
@@ -50,6 +54,7 @@ class AspepGoldenSpec extends AnyFunSuite {
   private def check(df: => DataFrame, state: String, gf: String, year: Int,
                     column: String, expected: Double): Unit =
     test(s"golden: $state $gf $year $column = $expected") {
+      assume(new java.io.File(rawDir).isDirectory, s"reference raw workbooks not found: $rawDir")
       val actual = lookup(df, state, gf, year, column)
       assert(relClose(actual, expected),
         s"expected $expected, got $actual (rel err ${math.abs(actual - expected) / expected})")
@@ -85,6 +90,7 @@ class AspepGoldenSpec extends AnyFunSuite {
   }
 
   test("combined covers 2003-2023 with plausible volume") {
+    assume(new java.io.File(rawDir).isDirectory, s"reference raw workbooks not found: $rawDir")
     val years = combined.select(col("year")).distinct().collect().map(_.getInt(0)).sorted
     assert(years.head == 2003, years.mkString(","))
     assert(years.last == 2023 || years.last == 2024, years.mkString(","))
@@ -94,6 +100,7 @@ class AspepGoldenSpec extends AnyFunSuite {
   }
 
   test("national rows lose state/region/division (no US in dim)") {
+    assume(new java.io.File(rawDir).isDirectory, s"reference raw workbooks not found: $rawDir")
     val us = combined.filter(col("`state code`") === "US")
       .select(col("state"), col("region"), col("state_scope")).collect()
     assert(us.nonEmpty)
@@ -101,6 +108,7 @@ class AspepGoldenSpec extends AnyFunSuite {
   }
 
   test("stats rows exist per (year, gov_function)") {
+    assume(new java.io.File(rawDir).isDirectory, s"reference raw workbooks not found: $rawDir")
     val n = derived.filter(col("`state code`") === "US-median").count()
     assert(n > 500, s"US-median rows = $n")
   }

@@ -57,4 +57,30 @@ class TidyPathSpec extends SparkTestBase {
     assert(wiRow.getAs[String]("state") == "Wisconsin")
     assert(wiRow.getAs[String]("division") == "East North Central")
   }
+
+  test("deriveStats over a 2024-only combine: pay_per_pt_hour present and null, other ratios computed") {
+    val dir = new java.io.File("target/tidy2024_derive")
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    dir.mkdirs()
+    writeXlsx(s"$dir/aspep_2024.xlsx", Seq(
+      header,
+      Seq("Missouri", "Correction", "9450", "37000000", "320",
+        "1884335", "40000", "9591", "9770", "38,884,335"),
+      Seq("Iowa", "Hospitals", "9800", "56000000", "600",
+        "2600000", "70000", "0", "10400", "58600000")))
+    // a combine holding no legacy year has no pt_hour column
+    val combined = Canonical.combineYears(spark, dir.toString, 2019, 2025)
+    assert(!combined.columns.contains("pt_hour") && combined.columns.contains("pt_hours"))
+    val derived = DeriveStats.deriveStats(combined)
+    assert(derived.schema("pay_per_pt_hour").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(derived.filter(col("pay_per_pt_hour").isNotNull).count() == 0)
+    assert(derived.count() == 2 + 2 * 2) // + US-median and US-mean per function
+    def ratios(code: String) = {
+      val r = derived.filter(col("`state code`") === code)
+        .select("pay_per_fte", "pay_per_ft").head()
+      (Option(r.get(0)), Option(r.get(1)))
+    }
+    assert(ratios("MO") == (Some(38884335d / 9591d), Some(37000000d / 9450d)))
+    assert(ratios("IA") == (None, Some(56000000d / 9800d))) // zero divisor -> null
+  }
 }
