@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
@@ -25,21 +26,31 @@ object Writers {
     * appear in the published artifacts (dollar amounts and head counts).
     */
   def prettyJsonArray(df: DataFrame, path: String): Unit = {
-    val schema = df.schema
+    val fields = df.schema.fields
+    // per schema, not per row: each field's `,\n        "name":` prefix
+    // and its cell renderer
+    val prefixes = fields.indices.map { i =>
+      (if (i > 0) "," else "") + "\n        " + jsonStr(fields(i).name) + ":"
+    }.toArray
+    val render = fields.map(f => renderer(f.dataType))
     // stream row-by-row: the extended artifact is ~256 MB of pretty
-    // JSON — building it in one StringBuilder doubles peak driver heap
+    // JSON — building it in one StringBuilder doubles peak driver heap.
+    // The rows are InternalRows, so no Row deserializer is generated
+    // for the 176-column extended schema; the copy is needed because
+    // the plan reuses each row's buffer.
     val w = Files.newBufferedWriter(Paths.get(path), StandardCharsets.UTF_8)
     try {
       w.write("[")
       var first = true
-      df.toLocalIterator().forEachRemaining { row =>
+      df.queryExecution.toRdd.map(_.copy()).toLocalIterator.foreach { row =>
         if (!first) w.write(",")
         first = false
         w.write("\n    {")
-        schema.fields.zipWithIndex.foreach { case (f, i) =>
-          if (i > 0) w.write(",")
-          w.write("\n        "); w.write(jsonStr(f.name)); w.write(":")
-          w.write(renderValue(row, i, f.dataType))
+        var i = 0
+        while (i < fields.length) {
+          w.write(prefixes(i))
+          w.write(if (row.isNullAt(i)) "null" else render(i)(row, i))
+          i += 1
         }
         w.write("\n    }")
       }
@@ -108,17 +119,21 @@ object Writers {
     spark.read.parquet(s"$tableDir/v=$v")
   }
 
-  private def renderValue(row: org.apache.spark.sql.Row, i: Int, dt: DataType): String =
-    if (row.isNullAt(i)) "null"
-    else dt match {
-      case DoubleType => pandasDouble(row.getDouble(i))
-      case FloatType => pandasDouble(row.getFloat(i).toDouble)
-      case IntegerType => row.getInt(i).toString
-      case LongType => row.getLong(i).toString
-      case StringType => jsonStr(row.getString(i))
-      case BooleanType => row.getBoolean(i).toString
-      case _ => jsonStr(String.valueOf(row.get(i)))
-    }
+  /** The JSON text of a non-null cell of type `dt`; a type outside the
+    * artifact domain is rendered from its external (Row) value, as
+    * `String.valueOf` shows it, in quotes.
+    */
+  private def renderer(dt: DataType): (InternalRow, Int) => String = dt match {
+    case DoubleType => (r, i) => pandasDouble(r.getDouble(i))
+    case FloatType => (r, i) => pandasDouble(r.getFloat(i).toDouble)
+    case IntegerType => (r, i) => r.getInt(i).toString
+    case LongType => (r, i) => r.getLong(i).toString
+    case StringType => (r, i) => jsonStr(r.getUTF8String(i).toString)
+    case BooleanType => (r, i) => r.getBoolean(i).toString
+    case _ =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+      (r, i) => jsonStr(String.valueOf(toScala(r.get(i, dt))))
+  }
 
   /** ujson (pandas to_json) double rendering: fixed-point with
     * double_precision=10 decimal places, trailing zeros trimmed, at
@@ -126,9 +141,10 @@ object Writers {
     * 0.1 -> "0.1", pi -> "3.1415926536", 1e-7 -> "0.0000001",
     * 1.5e-11 -> "0.0". NaN/inf -> null.
     */
-  private def pandasDouble(d: Double): String =
+  private[etl] def pandasDouble(d: Double): String =
     if (d.isNaN || d.isInfinite) "null"
     else if (math.abs(d) >= 1e16) d.toString // ujson exponent territory; outside artifact domain
+    else if (d == d.toLong) d.toLong.toString + ".0" // exact below 2^63; -0.0 -> "0.0"
     else {
       // exact-binary-value rounding (new BigDecimal(d), not valueOf):
       // ujson rounds the EXACT double, so -1234567.89 renders as
@@ -136,9 +152,12 @@ object Writers {
       // and would give -1234567.8900000000 instead
       val s = new java.math.BigDecimal(d)
         .setScale(10, java.math.RoundingMode.HALF_EVEN).toPlainString
-      val t = s.reverse.dropWhile(_ == '0').reverse
-      if (t.endsWith(".")) t + "0" else t
+      var end = s.length // scale 10: there is always a '.'
+      while (s.charAt(end - 1) == '0') end -= 1
+      if (s.charAt(end - 1) == '.') s.substring(0, end) + "0" else s.substring(0, end)
     }
+
+  private val hex = "0123456789abcdef".toCharArray
 
   private def jsonStr(s: String): String = {
     val b = new StringBuilder("\"")
@@ -149,7 +168,9 @@ object Writers {
       case '\n' => b.append("\\n")
       case '\r' => b.append("\\r")
       case '\t' => b.append("\\t")
-      case c if c < ' ' || c > '~' => b.append(f"\\u${c.toInt}%04x")
+      case c if c < ' ' || c > '~' =>
+        b.append("\\u").append(hex(c >> 12)).append(hex((c >> 8) & 15))
+          .append(hex((c >> 4) & 15)).append(hex(c & 15))
       case c => b.append(c)
     }
     b.append('"').toString

@@ -50,6 +50,39 @@ object MultiYearFixture {
   }
 }
 
+/** A hermetic one-year raw directory of awkward labels, each where
+  * one step of the label canonicalization (trim, case, recode, census
+  * lookup) can go wrong: spaces around a label; a tab and an NBSP,
+  * which Spark's `trim` keeps; mixed case and a `govFunctionMap`
+  * abbreviation; `İ` (lower-cases to two code points), `ß` (upper-cases
+  * to `SS`) and a Greek word ending in a final `Σ`; a letter of
+  * Unicode 16 (U+A7CB) that ICU lower-cases and older JDK tables do
+  * not; a state not in the dimension, a label empty after trimming, a
+  * null label and the national row. No two rows share the sort key.
+  */
+object LabelFixture {
+
+  val rows: Seq[Seq[String]] = MultiYearFixture.legacyRows.take(4) ++ Seq(
+    Seq("  Wisconsin  ", " Correction ", "100", "1000", "10"),
+    Seq("\tIowa", "Hospitals", "101", "1001", "11"),
+    Seq("Iowa\u00a0", "Hospitals\u00a0", "102", "1002", "12"),
+    Seq("nEw YoRk", "FINANCIAL Admin", "103", "1003", "13"),
+    Seq("\u0130OWA", "Stra\u00dfen", "104", "1004", "14"),
+    Seq("Stra\u00dfe", "\u039f\u0394\u039f\u03a3", "105", "1005", "15"),
+    Seq("Atlantis", "Highways \ua7cb", "106", "1006", "16"),
+    Seq("   ", "Police Protection", "107", "1007", "17"),
+    Seq("", "", "108", "1008", "18"),
+    Seq("United States", "Total", "109", "1009", "19"),
+    Seq("OHIO", "\u0130nstruction", "110", "1010", "20"))
+
+  /** Write the directory and return its path. */
+  def write(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("aspep_labels").toFile
+    XlsxFixture.writeXlsx(s"$dir/aspep_2003.xlsx", rows)
+    dir.getPath
+  }
+}
+
 /** `Canonical.combineYears` over several years at once: schema
   * widening, per-year `index`, the per-year skip of a bad workbook, and
   * equality with the per-year union the combine used to build.
@@ -60,10 +93,12 @@ class CombineYearsSpec extends SparkTestBase {
   private lazy val combined = Canonical.combineYears(spark, rawDir, 2003, 2025).cache()
 
   /** The per-year `unionByName(allowMissingColumns)` form of the
-    * combine: one DataFrame per parsed year, widened by the union, then
-    * the same enrichment and order as `combineYears`.
+    * combine, with the labels canonicalized by Spark's own expressions
+    * (`lower(trim)`, the recode maps, `upper`) and the census dimension
+    * joined as a broadcast DataFrame: one DataFrame per parsed year,
+    * widened by the union, then enriched and sorted as `combineYears`.
     */
-  private def unionReference(spark: SparkSession, years: Seq[Int]): DataFrame = {
+  private def unionReference(spark: SparkSession, rawDir: String, years: Seq[Int]): DataFrame = {
     val perYear = years.map { year =>
       val (names, data) = Canonical.parseYear(s"$rawDir/aspep_$year.xlsx", year)
       val schema = StructType(StructField("index", LongType, nullable = false) +:
@@ -80,8 +115,13 @@ class CombineYearsSpec extends SparkTestBase {
           lit(year).as("year"): _*)
         .withColumn("state code", upper(col("state")))
     }
+    val dimRows = Canonical.censusDim.toSeq.map { case (code, (state, region, division)) =>
+      Row(state, code, region, division)
+    }
+    val dim = spark.createDataFrame(spark.sparkContext.parallelize(dimRows, 1), StructType(
+      Seq("dim_state", "state code", "region", "division").map(StructField(_, StringType))))
     val enriched = perYear.reduce(_.unionByName(_, allowMissingColumns = true))
-      .join(broadcast(Canonical.censusDim(spark)), Seq("state code"), "left")
+      .join(broadcast(dim), Seq("state code"), "left")
       .withColumn("state", col("dim_state"))
       .drop("dim_state")
       .withColumn("state_scope",
@@ -129,7 +169,7 @@ class CombineYearsSpec extends SparkTestBase {
   }
 
   test("the combined frame equals the per-year unionByName reference") {
-    val reference = unionReference(spark, Seq(2003, 2024))
+    val reference = unionReference(spark, rawDir, Seq(2003, 2024))
     assert(combined.schema == reference.schema)
     assert(combined.exceptAll(reference).count() == 0)
     assert(reference.exceptAll(combined).count() == 0)
@@ -137,5 +177,30 @@ class CombineYearsSpec extends SparkTestBase {
     val tidy = Canonical.yearDf(spark, s"$rawDir/aspep_2024.xlsx", 2024)
     assert(tidy.columns.contains("pt_hours") && !tidy.columns.contains("pt_hour"))
     assert(tidy.count() == 2)
+  }
+
+  test("awkward labels are trimmed, cased, recoded and enriched as Spark's expressions do") {
+    val labelDir = LabelFixture.write()
+    val got = Canonical.combineYears(spark, labelDir, 2003, 2004)
+    val want = unionReference(spark, labelDir, Seq(2003))
+    assert(got.schema == want.schema) // nullability included
+    val rows = got.collect().toSeq
+    assert(rows == want.collect().toSeq)
+    assert(rows.length == 11)
+    // the fixture reaches each case it names
+    def at(index: Long): Row = rows.find(_.getAs[Long]("index") == index).get
+    def labels(index: Long): Seq[Any] =
+      Seq("state", "gov_function", "state code", "state_scope").map(at(index).getAs[Any](_))
+    assert(labels(0) == Seq("Wisconsin", "corrections", "WI", "state"))
+    assert(labels(1) == Seq(null, "hospitals", "\tIOWA", "state"))
+    assert(labels(2) == Seq(null, "hospitals\u00a0", "IOWA\u00a0", "state"))
+    assert(labels(3) == Seq("New York", "financial administration", "NY", "state"))
+    assert(labels(4) == Seq(null, "stra\u00dfen", "I\u0307OWA", "state"))
+    assert(labels(5) == Seq(null, "\u03bf\u03b4\u03bf\u03c2", "STRASSE", "state"))
+    assert(labels(6) == Seq(null, "highways \u0264", "ATLANTIS", "state"))
+    assert(labels(7) == Seq(null, "police protection", "", "state"))
+    assert(labels(8) == Seq(null, null, null, "state"))
+    assert(labels(9) == Seq(null, "total - all government employment functions", "US", "national"))
+    assert(at(10).getAs[String]("region") == "Midwest")
   }
 }

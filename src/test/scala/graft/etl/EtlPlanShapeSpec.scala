@@ -2,15 +2,19 @@ package graft.etl
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Lower, StringTrim, Upper}
 import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape guards for the ASPEP pipeline on hermetic input: the
-  * combine reads one relation (no per-year union) and sorts it as one
-  * partition with no exchange, so neither the derive `groupBy` nor the
+  * combine reads one relation (no per-year union) whose labels and
+  * census columns are final when it is built (no join, no string case
+  * or trim expression), and sorts it as one partition with no
+  * exchange, so neither the derive `groupBy` nor the
   * extended stage's two windows (lags, then one cohort window for every
   * rank) shuffle. Over a multi-partition input the extended stage still
   * runs two windows over two hash exchanges, not one window and sort
@@ -46,6 +50,18 @@ class EtlPlanShapeSpec extends SparkTestBase {
     assert(shuffles(nodes) == 0 && !nodes.exists(_.isInstanceOf[UnionExec]),
       df.queryExecution.executedPlan.treeString)
     assert(df.rdd.getNumPartitions == 1)
+  }
+
+  test("combine: no join or broadcast, no Lower, Upper or StringTrim executed") {
+    val df = combine()
+    val nodes = executed(df)
+    val plan = df.queryExecution.executedPlan.treeString
+    assert(!nodes.exists(n => n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[BroadcastExchangeExec]),
+      plan)
+    val caseOrTrim = nodes.flatMap(_.expressions).flatMap(_.collect {
+      case e @ (_: Lower | _: Upper | _: StringTrim) => e
+    })
+    assert(caseOrTrim.isEmpty, plan)
   }
 
   test("derive and extended over the combine: no shuffle exchange, exactly 2 WindowExec") {
