@@ -78,12 +78,7 @@ object MetaProbe {
     * the number a (path, table, manifest-value)-keyed table cache
     * would have to beat. */
   private def planCacheProbe(nDirs: Int, nStmts: Int): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
     val root = Files.createTempDirectory("metaprobe_pc").toString
     val cat = new graft.etl.SnapshotCatalog(root)

@@ -12,16 +12,14 @@ object AspepMain {
   def main(args: Array[String]): Unit = {
     val rawDir = if (args.length > 0) args(0) else "/root/reference/data/raw"
     val outDir = if (args.length > 1) args(1) else "/tmp/aspep_out"
+    val spark = graft.Harness.session()
+    run(spark, rawDir, outDir)
+    spark.stop()
+  }
+
+  /** The pipeline over the workbooks in `rawDir`, artifacts to `outDir`. */
+  def run(spark: SparkSession, rawDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
-
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val combined = Canonical.combineYears(spark, rawDir).cache()
     println(s"[aspep] combined rows=${combined.count()} cols=${combined.columns.length}")
     Writers.prettyJsonArray(combined, s"$outDir/combined_data.json")
@@ -37,6 +35,5 @@ object AspepMain {
     Writers.parquetByYear(combined, s"$outDir/combined_parquet")
 
     println(s"[aspep] artifacts written to $outDir")
-    spark.stop()
   }
 }

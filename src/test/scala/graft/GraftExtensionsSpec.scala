@@ -13,18 +13,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("extension registers slugify and dot_product for pure SQL") {
     // make sure a base session/context exists first
-    val base = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val base = Harness.session()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
       // spark.sql.extensions is a STATIC conf — ignored when the
       // SparkContext already exists — so the in-JVM test uses the
       // programmatic equivalent; a fresh cluster reads the conf form.
+      // pinned apart from the profile: the extension alone must register the functions
       val withExt = SparkSession.builder()
         .master("local[4]")
         .withExtensions(new GraftExtensions())

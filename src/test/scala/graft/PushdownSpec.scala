@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class PushdownSpec extends SparkTestBase {
 
   private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
-    flattenPlan(df.queryExecution.executedPlan)
+    Harness.flatten(df.queryExecution.executedPlan)
       .collect { case s: FileSourceScanExec => s }
 
   test("q1_agg reads only the columns it aggregates") {

@@ -1,39 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazy). */
+/** Specs run in the profile session (`Harness.session`): the same
+  * session, made active and default, whatever the suite order. */
 trait SparkTestBase extends AnyFunSuite {
-
-  /** Flatten a physical plan across AQE boundaries: unwraps the
-    * adaptive root (currentPhysicalPlan — the initial plan before
-    * execution, the final plan after) AND QueryStageExec leaves,
-    * which hide their stage under `.plan` where a children-only walk
-    * never looks. Includes subqueries.
-    */
-  def flattenPlan(p: SparkPlan): Seq[SparkPlan] = {
-    val self = p match {
-      case a: AdaptiveSparkPlanExec => flattenPlan(a.executedPlan)
-      case q: QueryStageExec => flattenPlan(q.plan)
-      case other => Seq(other)
-    }
-    self ++ p.children.flatMap(flattenPlan) ++ p.subqueries.flatMap(flattenPlan)
-  }
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session()
   val sf: String = "/root/testdata/sf0.001"
 }

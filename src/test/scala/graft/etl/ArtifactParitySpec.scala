@@ -58,13 +58,7 @@ class ArtifactParitySpec extends AnyFunSuite {
     * isolated session stay, so the pin does not depend on that.
     */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
+    val s = graft.Harness.session().newSession()
     s.conf.set("spark.sql.shuffle.partitions", "1")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s

@@ -64,12 +64,7 @@ class Aspep2024FixtureSpec extends AnyFunSuite {
     dir.getPath
   }
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.Harness.session()
 
   private lazy val combined: DataFrame = {
     spark.sparkContext.setLogLevel("WARN")

@@ -32,12 +32,7 @@ class AspepCatalogGoldenSpec extends AnyFunSuite {
 
   private val rawDir = "/root/reference/data/raw"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Harness.session()
 
   private lazy val combinedDirect: DataFrame = {
     spark.sparkContext.setLogLevel("WARN")

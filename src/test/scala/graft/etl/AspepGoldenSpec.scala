@@ -21,12 +21,7 @@ class AspepGoldenSpec extends AnyFunSuite {
 
   private val rawDir = "/root/reference/data/raw"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Harness.session()
 
   lazy val combined: DataFrame = {
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkTestBase
+import graft.{Harness, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Lower, StringTrim, Upper}
 import org.apache.spark.sql.catalyst.plans.logical.Union
@@ -31,7 +31,7 @@ class EtlPlanShapeSpec extends SparkTestBase {
   private def executed(df: DataFrame): Seq[SparkPlan] = {
     val qe = df.queryExecution
     assert(qe.toRdd.count() == df.count())
-    flattenPlan(qe.executedPlan)
+    Harness.flatten(qe.executedPlan)
   }
 
   private def shuffles(nodes: Seq[SparkPlan]): Int =

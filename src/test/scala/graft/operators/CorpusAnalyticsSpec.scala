@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase
+import graft.{Harness, SparkTestBase}
 
 /** Semantics + plan-shape pins for the corpus-curation analytics tier.
   * Value-level cross-engine checks live in the DuckDB gate; these pin
@@ -82,14 +82,14 @@ class CorpusAnalyticsSpec extends SparkTestBase {
   }
 
   test("decay_score plan: max timestamp is a broadcast scalar, one keyed agg") {
-    val plan = flattenPlan(
+    val plan = Harness.flatten(
       CorpusAnalytics.decayScore(spark, sf).queryExecution.executedPlan)
     // no sort-merge join; the only join is the broadcast of the 1-row max
     assert(!plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]))
   }
 
   test("source_overlap plan: size lookups broadcast") {
-    val plan = flattenPlan(
+    val plan = Harness.flatten(
       CorpusAnalytics.sourceOverlap(spark, sf).queryExecution.executedPlan)
     assert(plan.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 2)
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{Harness, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Structural invariants for the corpus-curation operators (the value
@@ -138,7 +138,7 @@ class CorpusSpec extends SparkTestBase {
     val heap = Corpus.sampleTopkPerGroupHeap(spark, sf)
     val window = Corpus.sampleTopkPerGroup(spark, sf)
     assert(heap.collect().toSet == window.collect().toSet)
-    val plan = flattenPlan(heap.queryExecution.executedPlan)
+    val plan = Harness.flatten(heap.queryExecution.executedPlan)
     assert(plan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec]))
     assert(!plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))

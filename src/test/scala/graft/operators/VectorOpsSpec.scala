@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase
+import graft.{Harness, SparkTestBase}
 
 /** Semantics + plan pins for the embedding feature-engineering tier:
   * z-score moments land on (0, 1) per dimension, the kNN graph is
@@ -24,7 +24,7 @@ class VectorOpsSpec extends SparkTestBase {
   }
 
   test("embedding_standardize plan: stats join broadcasts (no shuffle on the big side)") {
-    val plan = flattenPlan(
+    val plan = Harness.flatten(
       VectorOps.embeddingStandardize(spark, sf).queryExecution.executedPlan)
     assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]))
     assert(!plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{Harness, SparkTestBase}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -19,12 +19,12 @@ class BucketingSpec extends SparkTestBase {
       val q = Bucketing.bucketedJoin(spark)
       q.collect() // finalize any adaptive plan
       val plan = q.queryExecution.executedPlan
-      val joins = flattenPlan(plan).collect { case j: SortMergeJoinExec => j }
+      val joins = Harness.flatten(plan).collect { case j: SortMergeJoinExec => j }
       assert(joins.nonEmpty, s"expected a sort-merge join, got:\n$plan")
       // no exchange anywhere beneath the join: both sides read
       // co-located buckets straight off disk
       joins.foreach { j =>
-        val below = j.children.flatMap(flattenPlan)
+        val below = j.children.flatMap(Harness.flatten)
         assert(!below.exists(_.isInstanceOf[ShuffleExchangeExec]),
           s"shuffle under the bucketed join:\n$j")
       }

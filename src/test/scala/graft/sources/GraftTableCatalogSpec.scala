@@ -13,11 +13,7 @@ import graft.etl.SnapshotCatalog
   */
 class GraftTableCatalogSpec extends SparkTestBase {
 
-  /** Pin a BARE session (no extensions): the loud-failure pins below
-    * assert what a session WITHOUT GraftExtensions does, and a plain
-    * getOrCreate would silently adopt whatever session an earlier
-    * suite (PlanGuardSpec runs the extensions deployment) left
-    * active. The in-test extension sessions build their own. */
+  // bare session (no extensions): the loud-failure pins assert what a session without GraftExtensions does
   override lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -121,13 +117,8 @@ class GraftTableCatalogSpec extends SparkTestBase {
     assert(e.getMessage.contains("row-level deletes"),
       s"wrong failure: ${e.getMessage}")
     // with GraftExtensions: the rule swaps in the merge-on-read plan
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
     try {
-      val withExt = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.GraftExtensions())
-        .getOrCreate()
+      val withExt = graft.Harness.session()
       withExt.conf.set(s"spark.sql.catalog.$cn",
         classOf[GraftTableCatalog].getName)
       withExt.conf.set(s"spark.sql.catalog.$cn.path", root)
@@ -508,13 +499,8 @@ class GraftTableCatalogSpec extends SparkTestBase {
     cat.commit(Map("t" -> facts(1, 30).repartition(2)))
     val cn = register(root)
     spark.sql(s"DELETE FROM $cn.t WHERE k IN ('k3', 'k7') OR id >= 28")
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
     try {
-      val withExt = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.GraftExtensions())
-        .getOrCreate()
+      val withExt = graft.Harness.session()
       withExt.conf.set(s"spark.sql.catalog.$cn",
         classOf[GraftTableCatalog].getName)
       withExt.conf.set(s"spark.sql.catalog.$cn.path", root)

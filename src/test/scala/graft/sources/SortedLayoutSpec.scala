@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{Harness, SparkTestBase}
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** The range-sorted layout must (a) return identical results to the
@@ -20,7 +20,7 @@ class SortedLayoutSpec extends SparkTestBase {
     // collect(), not head(): head() clones the plan through a limit, so
     // the scan metrics would accrue on the clone, not the plan we read
     val n = q.collect()(0).getLong(0)
-    val scanned = flattenPlan(q.queryExecution.executedPlan)
+    val scanned = Harness.flatten(q.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec => f.metrics("numOutputRows").value }
       .sum
     (n, scanned)
@@ -62,7 +62,7 @@ class SortedLayoutSpec extends SparkTestBase {
     def boxScanned(path: String): (Long, Long) = {
       val q = SortedLayout.boxCount(spark, path, 0L, 150L, "2024-01-10", "2024-01-13")
       val n = q.collect()(0).getLong(0)
-      val scanned = flattenPlan(q.queryExecution.executedPlan)
+      val scanned = Harness.flatten(q.queryExecution.executedPlan)
         .collect { case f: FileSourceScanExec => f.metrics("numOutputRows").value }
         .sum
       (n, scanned)
