@@ -182,16 +182,28 @@ object Harness {
     spark.stop()
   }
 
-  /** Run `name` once with a listener attached; print the job count and
-    * every stage's wall time, summed executor task time, shuffle
-    * read/write bytes and task count. */
+  /** Whether a stage is parquet schema inference: the footer-reading
+    * job (`SchemaMergeUtils.mergeSchemasInParallel`) that
+    * `DataFrameReader.parquet` or `ParquetUtils.inferSchema` starts. The
+    * first line of a stage's details is the Spark method user code
+    * called. A read through [[ParquetSchemas]] starts one only the first
+    * time the session reads a set of files. */
+  def isSchemaInference(stage: StageInfo): Boolean = {
+    val site = stage.details.takeWhile(_ != '\n')
+    site.contains("DataFrameReader.parquet(") || site.contains("ParquetUtils$.inferSchema(")
+  }
+
+  /** Run `name` once with a listener attached; print the job count, how
+    * many of those jobs were schema inference (a read site that bypasses
+    * the schema memo shows up here), and every stage's wall time, summed
+    * executor task time, shuffle read/write bytes and task count. */
   private def probe(spark: SparkSession, dir: String, name: String): Unit = {
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[
       (Int, String, Long, Long, Long, Long, Int)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.put(j.jobId, j.stageIds.size)
+        jobs.put(j.jobId, j.stageInfos.exists(isSchemaInference))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val m = si.taskMetrics
@@ -209,8 +221,9 @@ object Harness {
     val dt = (System.nanoTime() - t0) / 1e9
     Thread.sleep(1000) // listener bus is async; let the tail drain
     spark.sparkContext.removeSparkListener(listener)
-    println(f"[probe] $name total=$dt%.2f s rows=$c jobs=${jobs.size}")
     import scala.jdk.CollectionConverters._
+    println(f"[probe] $name total=$dt%.2f s rows=$c jobs=${jobs.size} " +
+      s"schema_inference_jobs=${jobs.values.asScala.count(identity)}")
     stages.asScala.toSeq.sortBy(_._1).foreach {
       case (id, nm, wall, run, sr, sw, nt) =>
         println(f"[probe]   stage=$id%4d tasks=$nt%4d wall=$wall%6d ms " +

@@ -31,53 +31,60 @@ import org.apache.spark.sql.functions._
   */
 object ScaleUp {
 
-  private def withRep(s: SparkSession, df: DataFrame, factor: Int): DataFrame =
-    df.crossJoin(broadcast(s.range(factor).toDF("rep")))
+  /** Each row followed by its `factor` replicas, `rep` 0 first: an
+    * `explode` of a literal array, in the source's partitions and
+    * order. `rep` is a bigint, as a `range` column is. */
+  private def withRep(df: DataFrame, factor: Int): DataFrame =
+    df.withColumn("rep", explode(array((0 until factor).map(r => lit(r.toLong)): _*)))
 
   private def offset(c: String, stride: Long) =
     (col(c) + col("rep") * stride).as(c)
 
   /** Scale one source directory by `factor` into `outDir`. */
   def run(s: SparkSession, srcDir: String, outDir: String, factor: Int): Unit = {
-    def maxOf(t: String, c: String): Long =
-      Tables.load(s, srcDir, t).agg(max(col(c))).first().getLong(0) + 1L
+    val Seq(region, nation, customer, supplier, part, orders, lineitem, events,
+        documents, embeddings) = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings").map(Tables.load(s, srcDir, _))
 
-    val custStride = maxOf("customer", "c_custkey")
-    val suppStride = maxOf("supplier", "s_suppkey")
-    val partStride = maxOf("part", "p_partkey")
-    val ordStride  = maxOf("orders", "o_orderkey")
-    val docStride  = maxOf("documents", "doc_id")
-    val vecStride  = maxOf("embeddings", "vec_id")
-    val labelStride = Tables.load(s, srcDir, "embeddings")
-      .agg(max(col("label"))).first().getInt(0) + 1L
-    val eventStride = maxOf("events", "event_id")
-    val userStride  = maxOf("events", "user_id")
+    // max(c) + 1 of each key column of a table, from one aggregate
+    def strides(df: DataFrame, cs: String*): Seq[Long] = {
+      val r = df.select(cs.map(c => max(col(c)).cast("long")): _*).first()
+      cs.indices.map(r.getLong(_) + 1L)
+    }
+
+    val Seq(custStride) = strides(customer, "c_custkey")
+    val Seq(suppStride) = strides(supplier, "s_suppkey")
+    val Seq(partStride) = strides(part, "p_partkey")
+    val Seq(ordStride) = strides(orders, "o_orderkey")
+    val Seq(docStride) = strides(documents, "doc_id")
+    val Seq(vecStride, labelStride) = strides(embeddings, "vec_id", "label")
+    val Seq(eventStride, userStride) = strides(events, "event_id", "user_id")
 
     def write(name: String, df: DataFrame): Unit =
       df.drop("rep").write.mode("overwrite").parquet(s"$outDir/$name.parquet")
 
     // fixed dims: copy untouched
-    write("region", Tables.load(s, srcDir, "region"))
-    write("nation", Tables.load(s, srcDir, "nation"))
+    write("region", region)
+    write("nation", nation)
 
-    write("customer", withRep(s, Tables.load(s, srcDir, "customer"), factor)
+    write("customer", withRep(customer, factor)
       .select(offset("c_custkey", custStride), col("c_name"),
         col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"), col("rep")))
 
-    write("supplier", withRep(s, Tables.load(s, srcDir, "supplier"), factor)
+    write("supplier", withRep(supplier, factor)
       .select(offset("s_suppkey", suppStride), col("s_name"),
         col("s_nationkey"), col("s_acctbal"), col("rep")))
 
-    write("part", withRep(s, Tables.load(s, srcDir, "part"), factor)
+    write("part", withRep(part, factor)
       .select(offset("p_partkey", partStride), col("p_name"), col("p_brand"),
         col("p_type"), col("p_size"), col("p_retailprice"), col("rep")))
 
-    write("orders", withRep(s, Tables.load(s, srcDir, "orders"), factor)
+    write("orders", withRep(orders, factor)
       .select(offset("o_orderkey", ordStride), offset("o_custkey", custStride),
         col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
         col("o_orderpriority"), col("rep")))
 
-    write("lineitem", withRep(s, Tables.load(s, srcDir, "lineitem"), factor)
+    write("lineitem", withRep(lineitem, factor)
       .select(offset("l_orderkey", ordStride), offset("l_partkey", partStride),
         offset("l_suppkey", suppStride), col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"), col("l_discount"), col("l_tax"),
@@ -85,7 +92,7 @@ object ScaleUp {
 
     // events: keep ts as-is (raw load keeps the INT64-nanos column
     // intact so the output matches the driver files' read path)
-    write("events", withRep(s, Tables.load(s, srcDir, "events"), factor)
+    write("events", withRep(events, factor)
       .select(offset("event_id", eventStride), col("ts"),
         offset("user_id", userStride), col("event_type"), col("value"),
         col("props"), col("rep")))
@@ -94,7 +101,7 @@ object ScaleUp {
       concat(lit("r"), col("rep").cast("string"), w)
     val repText = when(col("rep") === 0, col("text")).otherwise(
       array_join(transform(split(col("text"), " "), repWord), " "))
-    write("documents", withRep(s, Tables.load(s, srcDir, "documents"), factor)
+    write("documents", withRep(documents, factor)
       .select(offset("doc_id", docStride), repText.as("text"), col("lang"),
         when(col("rep") === 0, col("source"))
           .otherwise(concat(col("source"), lit("_r"), col("rep"))).as("source"),
@@ -103,7 +110,7 @@ object ScaleUp {
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"), col("rep")))
 
-    write("embeddings", withRep(s, Tables.load(s, srcDir, "embeddings"), factor)
+    write("embeddings", withRep(embeddings, factor)
       .select(offset("vec_id", vecStride), col("embedding"),
         (col("label") + col("rep") * labelStride).cast("int").as("label"),
         col("rep")))

@@ -4,13 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-provided synthetic parquet tables
-  * (see /root/repo/TESTDATA.md). One parquet file per table under a
-  * scale-factor directory. Reads are plain `spark.read.parquet` so
-  * Catalyst gets full pushdown/pruning on the scans.
+  * (see TESTDATA.md). One parquet file per table under a scale-factor
+  * directory. Reads go through [[ParquetSchemas.read]]: the session
+  * infers a table's schema on its first load only, and every load is a
+  * plain parquet relation, so Catalyst still gets full pushdown and
+  * pruning on the scans.
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetSchemas.read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.ParquetSchemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
@@ -982,52 +983,6 @@ object SnapshotCatalog {
     * writes was replaced since the writer's base snapshot. */
   final class ConflictException(msg: String) extends RuntimeException(msg)
 
-  /** Session-scoped parquet-schema cache for catalog reads (r14,
-    * VERDICT r13 #7): every `spark.read.parquet(paths)` runs a
-    * schema-inference job before the real scan, and a catalog
-    * lifecycle query issues dozens of small snapshot reads — JobProbe
-    * measured aspep_catalog_roundtrip at 99 jobs, a third of them
-    * footer-inference on dirs read moments earlier. Published dirs
-    * are IMMUTABLE (a commit writes a fresh `u=<nonce>` dir and never
-    * rewrites one), so the inferred schema for an exact path list is
-    * a pure value: cache it per session (weak — dropped with the
-    * session) and replay it via `.schema(...)`, which skips the
-    * inference job and resolves per-file exactly as the inferred
-    * schema did (missing columns null, extra columns dropped —
-    * identical frames). Keyed on the exact sorted path list, so
-    * schema evolution across versions keys separately by
-    * construction.
-    */
-  private val schemaCache = new java.util.WeakHashMap[
-    SparkSession, java.util.LinkedHashMap[Seq[String], org.apache.spark.sql.types.StructType]]()
-
-  private[etl] def readImmutable(spark: SparkSession,
-      paths: Seq[String]): DataFrame = {
-    if (paths.isEmpty) return spark.read.parquet() // caller's error, unchanged
-    val lru = schemaCache.synchronized {
-      var m = schemaCache.get(spark)
-      if (m == null) {
-        m = new java.util.LinkedHashMap[Seq[String], org.apache.spark.sql.types.StructType](
-            16, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[Seq[String], org.apache.spark.sql.types.StructType]): Boolean =
-            size() > 128
-        }
-        schemaCache.put(spark, m)
-      }
-      m
-    }
-    val key = paths.sorted
-    val known = lru.synchronized(Option(lru.get(key)))
-    known match {
-      case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
-      case None =>
-        val df = spark.read.parquet(paths: _*)
-        lru.synchronized { lru.put(key, df.schema); () }
-        df
-    }
-  }
-
   /** Column names the position-delete machinery owns on a table's
     * scans (`_gfile`/`_gpos` internally, `_file`/`_pos` as served by
     * [[Snapshot.readWithPos]]) — a data column by any of these names
@@ -1115,10 +1070,10 @@ object SnapshotCatalog {
     def read(spark: SparkSession, table: String): DataFrame = {
       val entries = dirEntries(table)
       if (deletes.getOrElse(table, Nil).isEmpty)
-        SnapshotCatalog.readImmutable(spark, entries.map(e =>
-          s"$catalogDir/$table/${e._1}"))
+        ParquetSchemas.read(spark, entries.map(e =>
+          s"$catalogDir/$table/${e._1}"): _*)
       else mergeOnRead(spark, table, entries.map { case (d, seq) =>
-        (seq, SnapshotCatalog.readImmutable(spark, Seq(s"$catalogDir/$table/$d")))
+        (seq, ParquetSchemas.read(spark, s"$catalogDir/$table/$d"))
       })
     }
 
@@ -1135,7 +1090,7 @@ object SnapshotCatalog {
     def readWithPos(spark: SparkSession, table: String): DataFrame = {
       import org.apache.spark.sql.functions.col
       val parts = dirEntries(table).map { case (d, seq) =>
-        (seq, SnapshotCatalog.readImmutable(spark, Seq(s"$catalogDir/$table/$d")))
+        (seq, ParquetSchemas.read(spark, s"$catalogDir/$table/$d"))
       }
       // refuse data columns named like the address columns HERE, not
       // only at deletePositions time (ADVICE r11 #3): a `_file`/`_pos`
@@ -1191,14 +1146,14 @@ object SnapshotCatalog {
         val eqApplied = eqDels.groupBy(_._2).toSeq.sortBy(_._1)
           .foldLeft(addrDf) { case (acc, (kc, ds)) =>
             val keys = ds.map(d =>
-              SnapshotCatalog.readImmutable(spark, Seq(s"$catalogDir/$table/${d._1}")))
+              ParquetSchemas.read(spark, s"$catalogDir/$table/${d._1}"))
               .reduce(_.unionByName(_))
             acc.join(keys, Seq(kc), "left_anti")
           }
         if (posDels.isEmpty) eqApplied
         else {
           val vec = posDels.map(d =>
-            SnapshotCatalog.readImmutable(spark, Seq(s"$catalogDir/$table/${d._1}")))
+            ParquetSchemas.read(spark, s"$catalogDir/$table/${d._1}"))
             .reduce(_.unionByName(_))
           val applied = eqApplied.join(vec,
             eqApplied("_gfile") === vec("_file") &&
@@ -1327,14 +1282,13 @@ object SnapshotCatalog {
       if (kept.isEmpty)
         // schema from the dir listing only; the constant-false filter
         // folds to an empty relation — no row group is ever opened
-        return SnapshotCatalog.readImmutable(spark, versionDirs(table))
+        return ParquetSchemas.read(spark, versionDirs(table): _*)
           .filter(lit(false)).filter(residual)
       val seqs = dirEntries(table).toMap
       val parts = kept.groupBy(_.split('/').head).toSeq.sortBy(_._1)
         .map { case (dn, fs) =>
           (seqs(dn),
-            SnapshotCatalog.readImmutable(spark,
-              fs.sorted.map(f => s"$catalogDir/$table/$f"))
+            ParquetSchemas.read(spark, fs.sorted.map(f => s"$catalogDir/$table/$f"): _*)
               .filter(residual))
         }
       mergeOnRead(spark, table, parts)
@@ -1403,8 +1357,7 @@ object SnapshotCatalog {
         }
       }
       val scanned = if (scan.isEmpty) 0L
-        else SnapshotCatalog.readImmutable(spark,
-          scan.toSeq.map(f => s"$catalogDir/$table/$f"))
+        else ParquetSchemas.read(spark, scan.toSeq.map(f => s"$catalogDir/$table/$f"): _*)
           .filter(residual).count()
       (meta + scanned, scan.size, contained, totalFiles)
     }
@@ -1599,7 +1552,7 @@ object SnapshotCatalog {
     // footer-inference job; the stats are still computed by SCANNING
     // the written files (the sidecar describes the files, not the df)
     val df = knownSchema.map(sc => spark.read.schema(sc).parquet(dir))
-      .getOrElse(spark.read.parquet(dir))
+      .getOrElse(ParquetSchemas.read(spark, dir))
     cols.foreach { c =>
       require(df.columns.contains(c), s"stats column $c not in $dir")
       val ok = df.schema(c).dataType match {
@@ -1779,7 +1732,7 @@ object SnapshotCatalog {
     import org.apache.spark.sql.types._
     // same schema pass-through as writeFileStats (r14)
     val df = knownSchema.map(sc => spark.read.schema(sc).parquet(dir))
-      .getOrElse(spark.read.parquet(dir))
+      .getOrElse(ParquetSchemas.read(spark, dir))
     cols.foreach { c =>
       require(df.columns.contains(c), s"bloom column $c not in $dir")
       val ok = df.schema(c).dataType match {

@@ -116,18 +116,27 @@ object Writers {
   def readVersioned(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame = {
     val v = currentVersion(tableDir).getOrElse(
       throw new IllegalStateException(s"no committed version under $tableDir"))
-    spark.read.parquet(s"$tableDir/v=$v")
+    graft.ParquetSchemas.read(spark, s"$tableDir/v=$v")
   }
 
-  /** The JSON text of a non-null cell of type `dt`; a type outside the
-    * artifact domain is rendered from its external (Row) value, as
-    * `String.valueOf` shows it, in quotes.
+  /** The JSON text of a non-null cell of type `dt`, as pandas renders
+    * the same column: integers as numbers, a decimal as its double, a
+    * date or timestamp as epoch milliseconds (truncated toward zero, so
+    * -1.5 ms is -1). A type pandas has no column form for (arrays,
+    * maps, structs, binary) is rendered from its external (Row) value,
+    * as `String.valueOf` shows it, in quotes.
     */
   private def renderer(dt: DataType): (InternalRow, Int) => String = dt match {
     case DoubleType => (r, i) => pandasDouble(r.getDouble(i))
     case FloatType => (r, i) => pandasDouble(r.getFloat(i).toDouble)
+    case d: DecimalType =>
+      (r, i) => pandasDouble(r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.doubleValue)
+    case ByteType => (r, i) => r.getByte(i).toString
+    case ShortType => (r, i) => r.getShort(i).toString
     case IntegerType => (r, i) => r.getInt(i).toString
     case LongType => (r, i) => r.getLong(i).toString
+    case DateType => (r, i) => (r.getInt(i) * 86400000L).toString
+    case TimestampType | TimestampNTZType => (r, i) => (r.getLong(i) / 1000L).toString
     case StringType => (r, i) => jsonStr(r.getUTF8String(i).toString)
     case BooleanType => (r, i) => r.getBoolean(i).toString
     case _ =>

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Scalar cleaning/derivation functions re-expressing the reference's
   * value-canonicalization semantics (see SURVEY.md §2.8; reference
@@ -38,7 +39,7 @@ object Cleaning {
 
   /** cleanNumericStr + null-coercing cast (try_cast survives ANSI mode). */
   def cleanNumeric(c: Column): Column =
-    cleanNumericStr(c).try_cast("double")
+    cleanNumericStr(c).try_cast(DoubleType)
 
   /** Classifier pattern from reference assets.py:35-39 ("US" ->
     * national, else state), generalized: a chain of when/otherwise.

@@ -402,7 +402,7 @@ object Dedup {
               df.sparkSession.sessionState.newHadoopConf())
             if (fs.exists(stale)) fs.delete(stale, true)
           }
-          df.sparkSession.read.parquet(path)
+          graft.ParquetSchemas.read(df.sparkSession, path)
       }
     // one up-front job materializes the (typically expensive) pair set
     val pairs = materialize(pairsIn, "pairs")

@@ -147,6 +147,6 @@ object LaneCache {
         }
       } finally { osLock.release(); lockCh.close() }
     }
-    s.read.parquet(vDir.getPath)
+    graft.ParquetSchemas.read(s, vDir.getPath)
   }
 }

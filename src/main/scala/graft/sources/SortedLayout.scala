@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ParquetSchemas, Tables}
 
 /** Range-sorted parquet layout — the storage-side half of the 100 TB
   * SCAN story (Bucketing covers joins). `repartitionByRange` on the
@@ -68,7 +68,7 @@ object SortedLayout {
   /** A narrow time-range count over a written layout. */
   def rangeCount(s: SparkSession, path: String,
       lo: String, hi: String): DataFrame =
-    s.read.parquet(path)
+    ParquetSchemas.read(s, path)
       .filter(col("ts") >= lit(lo).cast("timestamp") &&
         col("ts") < lit(hi).cast("timestamp"))
       .agg(count(lit(1)).as("n"))
@@ -120,7 +120,7 @@ object SortedLayout {
   /** A 2-D box count (user range x time range) over a written layout. */
   def boxCount(s: SparkSession, path: String, userLo: Long, userHi: Long,
       tsLo: String, tsHi: String): DataFrame =
-    s.read.parquet(path)
+    ParquetSchemas.read(s, path)
       .filter(col("user_id") >= userLo && col("user_id") < userHi &&
         col("ts") >= lit(tsLo).cast("timestamp") &&
         col("ts") < lit(tsHi).cast("timestamp"))

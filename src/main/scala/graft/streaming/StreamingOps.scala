@@ -49,7 +49,7 @@ object StreamingOps {
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(s"$dir/events.parquet")
     val tsType =
-      if (path.exists()) spark.read.parquet(path.toString).schema("ts").dataType
+      if (path.exists()) graft.ParquetSchemas.read(spark, path.toString).schema("ts").dataType
       else LongType
     val src =
       if (path.isDirectory)
@@ -839,7 +839,7 @@ object StreamingOps {
   def readOrders(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(s"$dir/orders.parquet")
     val schema =
-      if (path.exists()) spark.read.parquet(path.toString).schema
+      if (path.exists()) graft.ParquetSchemas.read(spark, path.toString).schema
       else StructType(Seq(
         StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
         StructField("o_orderstatus", StringType),

@@ -51,13 +51,17 @@ object CrossSectionFixture {
   * combine is one sorted partition, so every `US-mean` is its
   * cross-section summed in state order, and the three JSON artifacts
   * do not move with how many RDDs the session made before the combine
-  * (a range sort's sampler is seeded by an RDD id).
+  * (a range sort's sampler is seeded by an RDD id). The year-partitioned
+  * parquet is compared by content, not bytes: parquet-mr lists each
+  * column chunk's encodings in hash-set order, so two equal writes can
+  * differ in their footers (docs/DIVERGENCES.md item 9).
   */
 class ArtifactDeterminismSpec extends SparkTestBase {
 
   private lazy val rawDir = CrossSectionFixture.write()
 
-  private case class Run(combined: DataFrame, derived: DataFrame, artifacts: Seq[Array[Byte]])
+  private case class Run(combined: DataFrame, derived: DataFrame, artifacts: Seq[Array[Byte]],
+      parquet: java.io.File)
 
   /** The pipeline as AspepMain runs it, after `unrelated` RDDs. */
   private def run(unrelated: Int): Run = {
@@ -71,11 +75,29 @@ class ArtifactDeterminismSpec extends SparkTestBase {
       Writers.prettyJsonArray(df, path.toString)
       java.nio.file.Files.readAllBytes(path)
     }
+    val parquet = out.resolve("combined_parquet").toFile
+    Writers.parquetByYear(combined, parquet.getPath)
     extended.unpersist()
-    Run(combined, derived, artifacts)
+    Run(combined, derived, artifacts, parquet)
   }
 
   private lazy val first = run(0)
+
+  /** Runs after 1 and 3 unrelated RDDs; only their outputs are kept. */
+  private lazy val later: Seq[(Int, Run)] = Seq(1, 3).map { k =>
+    val r = run(k)
+    r.derived.unpersist()
+    r.combined.unpersist()
+    k -> r
+  }
+
+  /** Each `year=` partition of a parquet artifact: its rows in file
+    * order, and the schema its files carry. */
+  private def yearParts(dir: java.io.File): Seq[(String, String, Seq[Row])] =
+    dir.listFiles().filter(_.getName.startsWith("year=")).map(_.getName).sorted.toSeq.map { y =>
+      val df = spark.read.parquet(s"$dir/$y")
+      (y, df.schema.json, df.collect().toSeq)
+    }
 
   test("the combined frame is one partition") {
     assert(first.combined.rdd.getNumPartitions == 1)
@@ -105,13 +127,24 @@ class ArtifactDeterminismSpec extends SparkTestBase {
   }
 
   test("the three JSON artifacts are byte-identical after 0, 1 and 3 unrelated RDDs") {
-    Seq(1, 3).foreach { k =>
-      val again = run(k)
+    later.foreach { case (k, again) =>
       first.artifacts.zip(again.artifacts).zipWithIndex.foreach { case ((a, b), i) =>
         assert(java.util.Arrays.equals(a, b), s"artifact $i differs after $k unrelated RDDs")
       }
-      again.derived.unpersist()
-      again.combined.unpersist()
+    }
+  }
+
+  test("combined_parquet has equal rows, schema and year partitions after 0, 1 and 3 unrelated RDDs") {
+    val want = yearParts(first.parquet)
+    assert(want.map(_._1) == (2003 to 2006).map(y => s"year=$y") :+ "year=2024")
+    assert(want.map(_._3.length).sum == first.combined.count())
+    later.foreach { case (k, again) =>
+      val got = yearParts(again.parquet)
+      assert(got.map(_._1) == want.map(_._1), s"year partitions differ after $k unrelated RDDs")
+      got.zip(want).foreach { case ((y, schema, rows), (_, wantSchema, wantRows)) =>
+        assert(schema == wantSchema, s"$y schema differs after $k unrelated RDDs")
+        assert(rows == wantRows, s"$y rows differ after $k unrelated RDDs")
+      }
     }
   }
 }

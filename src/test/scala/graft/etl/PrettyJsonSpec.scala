@@ -7,11 +7,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** `Writers.prettyJsonArray` renders from InternalRows with a fast path
-  * for integral doubles. Both are checked against the forms they
-  * replaced, kept here as references: the exact `BigDecimal` double
-  * rendering, and the Row-based writer over a frame of every cell type
-  * the writer distinguishes, plus the types it renders through
-  * `String.valueOf`. (The pandas bytes themselves are pinned by
+  * for integral doubles. Both are checked against plain references kept
+  * here: the exact `BigDecimal` double rendering, and a Row-based writer
+  * over a frame of every cell type the writer distinguishes, rendered
+  * as pandas renders it (a decimal as its double, dates and timestamps
+  * as epoch milliseconds). (The pandas bytes themselves are pinned by
   * WritersParitySpec.)
   */
 class PrettyJsonSpec extends SparkTestBase {
@@ -28,8 +28,7 @@ class PrettyJsonSpec extends SparkTestBase {
       if (t.endsWith(".")) t + "0" else t
     }
 
-  /** The Row-based writer `prettyJsonArray` was before it read
-    * InternalRows. */
+  /** A Row-based writer with pandas' cell rendering. */
   private def rowWriter(df: DataFrame, path: String): Unit = {
     def jsonStr(s: String): String = {
       val b = new StringBuilder("\"")
@@ -50,8 +49,15 @@ class PrettyJsonSpec extends SparkTestBase {
       else dt match {
         case DoubleType => bigDecimalDouble(row.getDouble(i))
         case FloatType => bigDecimalDouble(row.getFloat(i).toDouble)
+        case _: DecimalType => bigDecimalDouble(row.getDecimal(i).doubleValue)
+        case ByteType => row.getByte(i).toString
+        case ShortType => row.getShort(i).toString
         case IntegerType => row.getInt(i).toString
         case LongType => row.getLong(i).toString
+        case DateType => (row.getDate(i).toLocalDate.toEpochDay * 86400000L).toString
+        case TimestampType =>
+          val t = row.getTimestamp(i).toInstant
+          ((t.getEpochSecond * 1000000L + t.getNano / 1000) / 1000L).toString
         case StringType => jsonStr(row.getString(i))
         case BooleanType => row.getBoolean(i).toString
         case _ => jsonStr(String.valueOf(row.get(i)))
@@ -114,7 +120,8 @@ class PrettyJsonSpec extends SparkTestBase {
       StructField("at", TimestampType),
       StructField("label", StringType),
       StructField("small", ShortType),
-      StructField("path/with \"quotes\" \u00e9", StringType)))
+      StructField("path/with \"quotes\" \u00e9", StringType),
+      StructField("tiny", ByteType)))
     val texts = Seq("Wisconsin", "a/b\\c", "straße Σ İ  \t\n\r\u0001", "\ud83d\ude00 emoji",
       "\"quoted\"", "", "~ \u007f \u0080 \uffff")
     val rng = new java.util.SplittableRandom(7L)
@@ -127,10 +134,12 @@ class PrettyJsonSpec extends SparkTestBase {
         maybe(rng.nextInt(-1000, 1000) / 8.0f),
         maybe(new java.math.BigDecimal(java.math.BigInteger.valueOf(rng.nextLong(-99999999999L, 99999999999L)), 3)),
         maybe(java.sql.Date.valueOf(java.time.LocalDate.of(1990, 1, 1).plusDays(rng.nextInt(20000)))),
-        maybe(new java.sql.Timestamp(rng.nextLong(0L, 2000000000000L))),
+        // micros on both sides of 1970: epoch millis truncate toward zero
+        maybe(java.time.Instant.ofEpochSecond(0L, rng.nextLong(-2000000000000000L, 2000000000000000L) * 1000L)),
         maybe(texts(rng.nextInt(texts.length))),
         maybe(rng.nextInt(-300, 300).toShort),
-        maybe(s"row $i / ${texts(i % texts.length)}"))
+        maybe(s"row $i / ${texts(i % texts.length)}"),
+        maybe(rng.nextInt(-128, 128).toByte))
     }
     // several partitions, each of many rows: a reused row buffer left
     // uncopied would repeat a partition's last row

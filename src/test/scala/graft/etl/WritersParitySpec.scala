@@ -26,6 +26,18 @@ class WritersParitySpec extends SparkTestBase {
     assert(got === want)
   }
 
+  test("prettyJsonArray renders byte, short, decimal, date and timestamp cells as pandas does") {
+    // numbers, a decimal as its double, dates and instants (some before
+    // 1970, one with a sub-millisecond part) as epoch milliseconds
+    val df = spark.read.parquet(fixture("pretty_typed_input.parquet").toString)
+      .orderBy("id")
+    val out = Files.createTempFile("parity_typed", ".json")
+    Writers.prettyJsonArray(df, out.toString)
+    val got = new String(Files.readAllBytes(out), "UTF-8")
+    val want = new String(Files.readAllBytes(fixture("pretty_typed_records.json")), "UTF-8")
+    assert(got === want)
+  }
+
   test("prettyJsonArray renders an empty frame like pandas") {
     val df = spark.read.parquet(fixture("pretty_input.parquet").toString)
       .filter("id < 0")
