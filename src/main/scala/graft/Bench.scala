@@ -30,6 +30,16 @@ object Bench {
     else (merged("queries", "queries_floor"), merged("sf1_queries", "sf1_floor"))
   }
 
+  /** The sf1 stage's keys, or, when the stage fails, an
+    * `"sf1_error":"<class>: <message>"` key in their place: a failed
+    * ScaleUp, or the refusal to scale a corpus into itself, shows in
+    * the record instead of as missing keys. */
+  def sf1Stage(keys: => String): String =
+    try keys catch {
+      case e: Throwable =>
+        ",\"sf1_error\":" + new ObjectMapper().writeValueAsString(s"${e.getClass.getName}: ${e.getMessage}")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session()
@@ -176,7 +186,7 @@ object Bench {
     // Disable with SPARK_GRAFT_SF1=0.
     val sf1Extra: String =
       if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") == "0") ""
-      else try {
+      else sf1Stage {
         val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/bench-sf1")
         // benching the 10x corpus directly (SF_DIR == SF1_DIR) must not
         // re-derive it into itself — ensure() refuses; skip the stage
@@ -215,7 +225,7 @@ object Bench {
           else { val t2 = time(sf1Dir, fn); if (t2 < 0) t1 else math.min(t1, t2) }
         }
         s""","sf1_queries":${toJson(r1)},"sf1_total":${r1.values.filter(_ > 0).sum},"sf1_factor":10,"calib_sf1_sec":$calibSf1,"sf1_floor":${toJson(floorOf(r1, priorsSf1))}${retriedJson("sf1_retried", sf1Retried)}"""
-      } catch { case _: Throwable => "" }
+      }
 
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"sf":"$sfDir","calib_sec":$calibSec,"queries_floor":${toJson(floorOf(results, priorsSf))}$sf1Extra${retriedJson("retried", retried)}}"""
     println(line)

@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors}
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +20,8 @@ import org.apache.spark.sql.functions._
   * original data, byte-identical values):
   *   - every PK/FK gets `key + rep * stride` with stride = max(key)+1
   *     from the source data, so referential integrity is preserved
-  *     per replica and joins scale linearly;
+  *     per replica and joins scale linearly; the max is read from the
+  *     source files' row-group statistics, not computed by a job;
   *   - `region`/`nation` stay as-is (fixed dimensions, like TPC-H);
   *   - `documents.text` gets each word prefixed with "r<rep>" for
   *     rep > 0: replicas share NO shingles, so near-dup structure is
@@ -28,6 +36,7 @@ import org.apache.spark.sql.functions._
   *
   * All remaps are pure column expressions — no RNG, no driver loops;
   * output is a parquet directory per table, readable by Tables.load.
+  * A run starts one Spark job per table written and no other.
   */
 object ScaleUp {
 
@@ -40,80 +49,123 @@ object ScaleUp {
   private def offset(c: String, stride: Long) =
     (col(c) + col("rep") * stride).as(c)
 
-  /** Scale one source directory by `factor` into `outDir`. */
-  def run(s: SparkSession, srcDir: String, outDir: String, factor: Int): Unit = {
-    val Seq(region, nation, customer, supplier, part, orders, lineitem, events,
-        documents, embeddings) = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings").map(Tables.load(s, srcDir, _))
+  /** The key columns whose strides the remap uses, per table. */
+  private val KeyColumns = Map(
+    "customer" -> Seq("c_custkey"), "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"), "orders" -> Seq("o_orderkey"),
+    "documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id", "label"),
+    "events" -> Seq("event_id", "user_id"))
 
-    // max(c) + 1 of each key column of a table, from one aggregate
-    def strides(df: DataFrame, cs: String*): Seq[Long] = {
-      val r = df.select(cs.map(c => max(col(c)).cast("long")): _*).first()
-      cs.indices.map(r.getLong(_) + 1L)
+  /** `max(c) + 1` over `df`'s files, for each key column `c`, from
+    * the footers' row-group statistics: no Spark job. A row group with
+    * no rows adds nothing; a row group with rows and no statistic for
+    * `c` fails the run with the file and column named. pyarrow and
+    * Spark's parquet writer both write these statistics. */
+  private[graft] def strides(df: DataFrame, cs: Seq[String]): Seq[Long] = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val footers = df.inputFiles.toSeq.map { f =>
+      f -> ParquetSchemas.footer(HadoopInputFile.fromPath(new Path(f), conf),
+        ParquetMetadataConverter.NO_FILTER)
     }
+    cs.map { c =>
+      val maxes = for {
+        (file, footer) <- footers
+        block <- footer.getBlocks.asScala if block.getRowCount > 0
+        stats = block.getColumns.asScala.find(_.getPath.toDotString == c)
+          .map(_.getStatistics).filterNot(st => st == null || st.isEmpty)
+          .getOrElse(throw new IllegalStateException(
+            s"$file: a row group of ${block.getRowCount} rows has no statistics for column $c"))
+        if stats.hasNonNullValue
+      } yield stats.genericGetMax.asInstanceOf[Number].longValue
+      if (maxes.isEmpty)
+        throw new IllegalStateException(s"no non-null $c in ${df.inputFiles.mkString(", ")}")
+      maxes.max + 1L
+    }
+  }
 
-    val Seq(custStride) = strides(customer, "c_custkey")
-    val Seq(suppStride) = strides(supplier, "s_suppkey")
-    val Seq(partStride) = strides(part, "p_partkey")
-    val Seq(ordStride) = strides(orders, "o_orderkey")
-    val Seq(docStride) = strides(documents, "doc_id")
-    val Seq(vecStride, labelStride) = strides(embeddings, "vec_id", "label")
-    val Seq(eventStride, userStride) = strides(events, "event_id", "user_id")
+  /** Runs every `body` on `pool` and waits for all of them, then
+    * rethrows the first failure: no job outlives the call. */
+  private[graft] def all[T](pool: ExecutorService, bodies: Seq[() => T]): Seq[T] = {
+    val runs = bodies.map(b => pool.submit(new Callable[T] { def call(): T = b() }))
+    runs.map(r => Try(r.get())).map {
+      case Failure(e: ExecutionException) => throw e.getCause
+      case done => done.get
+    }
+  }
 
-    def write(name: String, df: DataFrame): Unit =
-      df.drop("rep").write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+  /** Scale one source directory by `factor` into `outDir`. The loads,
+    * and then the writes, run concurrently on a pool of
+    * `defaultParallelism` threads: each write is one Spark job with a
+    * task per input split, one at the corpus sizes ScaleUp reads, so
+    * one after another they leave all but one task slot idle. */
+  def run(s: SparkSession, srcDir: String, outDir: String, factor: Int): Unit = {
+    val pool = Executors.newFixedThreadPool(s.sparkContext.defaultParallelism)
+    try {
+      val names = Seq("region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings")
+      val t = all(pool, names.map(n => () => n -> Tables.load(s, srcDir, n))).toMap
+      val stride = KeyColumns.toSeq.flatMap { case (n, cs) => cs.zip(strides(t(n), cs)) }.toMap
 
-    // fixed dims: copy untouched
-    write("region", region)
-    write("nation", nation)
+      def write(name: String, df: DataFrame): () => Unit =
+        () => df.drop("rep").write.mode("overwrite").parquet(s"$outDir/$name.parquet")
 
-    write("customer", withRep(customer, factor)
-      .select(offset("c_custkey", custStride), col("c_name"),
-        col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"), col("rep")))
+      val repWord = (w: org.apache.spark.sql.Column) =>
+        concat(lit("r"), col("rep").cast("string"), w)
+      val repText = when(col("rep") === 0, col("text")).otherwise(
+        array_join(transform(split(col("text"), " "), repWord), " "))
 
-    write("supplier", withRep(supplier, factor)
-      .select(offset("s_suppkey", suppStride), col("s_name"),
-        col("s_nationkey"), col("s_acctbal"), col("rep")))
+      all(pool, Seq(
+        // fixed dims: copy untouched
+        write("region", t("region")),
+        write("nation", t("nation")),
 
-    write("part", withRep(part, factor)
-      .select(offset("p_partkey", partStride), col("p_name"), col("p_brand"),
-        col("p_type"), col("p_size"), col("p_retailprice"), col("rep")))
+        write("customer", withRep(t("customer"), factor)
+          .select(offset("c_custkey", stride("c_custkey")), col("c_name"),
+            col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"), col("rep"))),
 
-    write("orders", withRep(orders, factor)
-      .select(offset("o_orderkey", ordStride), offset("o_custkey", custStride),
-        col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-        col("o_orderpriority"), col("rep")))
+        write("supplier", withRep(t("supplier"), factor)
+          .select(offset("s_suppkey", stride("s_suppkey")), col("s_name"),
+            col("s_nationkey"), col("s_acctbal"), col("rep"))),
 
-    write("lineitem", withRep(lineitem, factor)
-      .select(offset("l_orderkey", ordStride), offset("l_partkey", partStride),
-        offset("l_suppkey", suppStride), col("l_linenumber"), col("l_quantity"),
-        col("l_extendedprice"), col("l_discount"), col("l_tax"),
-        col("l_returnflag"), col("l_linestatus"), col("l_shipdate"), col("rep")))
+        write("part", withRep(t("part"), factor)
+          .select(offset("p_partkey", stride("p_partkey")), col("p_name"), col("p_brand"),
+            col("p_type"), col("p_size"), col("p_retailprice"), col("rep"))),
 
-    // events: keep ts as-is (raw load keeps the INT64-nanos column
-    // intact so the output matches the driver files' read path)
-    write("events", withRep(events, factor)
-      .select(offset("event_id", eventStride), col("ts"),
-        offset("user_id", userStride), col("event_type"), col("value"),
-        col("props"), col("rep")))
+        write("orders", withRep(t("orders"), factor)
+          .select(offset("o_orderkey", stride("o_orderkey")),
+            offset("o_custkey", stride("c_custkey")),
+            col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
+            col("o_orderpriority"), col("rep"))),
 
-    val repWord = (w: org.apache.spark.sql.Column) =>
-      concat(lit("r"), col("rep").cast("string"), w)
-    val repText = when(col("rep") === 0, col("text")).otherwise(
-      array_join(transform(split(col("text"), " "), repWord), " "))
-    write("documents", withRep(documents, factor)
-      .select(offset("doc_id", docStride), repText.as("text"), col("lang"),
-        when(col("rep") === 0, col("source"))
-          .otherwise(concat(col("source"), lit("_r"), col("rep"))).as("source"),
-        col("rep"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .select(col("doc_id"), col("text"), col("lang"), col("source"),
-        col("n_chars"), col("rep")))
+        write("lineitem", withRep(t("lineitem"), factor)
+          .select(offset("l_orderkey", stride("o_orderkey")),
+            offset("l_partkey", stride("p_partkey")),
+            offset("l_suppkey", stride("s_suppkey")), col("l_linenumber"), col("l_quantity"),
+            col("l_extendedprice"), col("l_discount"), col("l_tax"),
+            col("l_returnflag"), col("l_linestatus"), col("l_shipdate"), col("rep"))),
 
-    write("embeddings", withRep(embeddings, factor)
-      .select(offset("vec_id", vecStride), col("embedding"),
-        (col("label") + col("rep") * labelStride).cast("int").as("label"),
-        col("rep")))
+        // events: keep ts as-is (raw load keeps the INT64-nanos column
+        // intact so the output matches the driver files' read path)
+        write("events", withRep(t("events"), factor)
+          .select(offset("event_id", stride("event_id")), col("ts"),
+            offset("user_id", stride("user_id")), col("event_type"), col("value"),
+            col("props"), col("rep"))),
+
+        write("documents", withRep(t("documents"), factor)
+          .select(offset("doc_id", stride("doc_id")), repText.as("text"), col("lang"),
+            when(col("rep") === 0, col("source"))
+              .otherwise(concat(col("source"), lit("_r"), col("rep"))).as("source"),
+            col("rep"))
+          .withColumn("n_chars", length(col("text")).cast("long"))
+          .select(col("doc_id"), col("text"), col("lang"), col("source"),
+            col("n_chars"), col("rep"))),
+
+        write("embeddings", withRep(t("embeddings"), factor)
+          .select(offset("vec_id", stride("vec_id")), col("embedding"),
+            (col("label") + col("rep") * stride("label")).cast("int").as("label"),
+            col("rep")))))
+      ()
+    } finally pool.shutdown()
   }
 
   /** Generate only if the completion marker is absent or was written

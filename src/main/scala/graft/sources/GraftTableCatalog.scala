@@ -461,8 +461,7 @@ class GraftSnapshotTable(val catalogDir: String, val tableName: String,
   private lazy val fileIndex = new GraftSidecarFileIndex(spark, snap, tableName, dirs)
 
   private lazy val dataSchema: StructType =
-    org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
-      .inferSchema(spark, Map.empty[String, String], fileIndex.allFiles())
+    graft.ParquetSchemas.inferSchema(spark, fileIndex.allFiles())
       .map(s => GraftSnapshotTable.asNullable(s).asInstanceOf[StructType])
       .getOrElse(throw new IllegalArgumentException(
         s"unable to infer the parquet schema of $fullName"))

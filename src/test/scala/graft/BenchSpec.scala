@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** `Bench.priors`: the retry priors read from a previous run's
-  * `bench_last.json`. */
+  * `bench_last.json`; `Bench.sf1Stage`: a failed sf1 stage leaves its
+  * reason in the record. */
 class BenchSpec extends AnyFunSuite {
 
   test("a prior written with a negative exponent reads as its value") {
@@ -31,5 +32,17 @@ class BenchSpec extends AnyFunSuite {
     val keys = root.get("queries").fieldNames().asScala.toSet
     val (p, _) = Bench.priors(text, root.get("sf").asText())
     assert(keys.nonEmpty && keys.subsetOf(p.keySet))
+  }
+
+  test("a failed sf1 stage records its error class and message") {
+    def record(extra: String) = new ObjectMapper().readTree(s"""{"metric":"total"$extra}""")
+    assert(record(Bench.sf1Stage(""","sf1_total":1.5""")).get("sf1_total").asDouble == 1.5)
+    val failed = record(Bench.sf1Stage(throw new IllegalStateException("no \"corpus\" here")))
+    assert(failed.get("sf1_error").asText == "java.lang.IllegalStateException: no \"corpus\" here")
+    // ScaleUp's refusal to scale a corpus into itself, before any Spark work
+    val dir = java.nio.file.Files.createTempDirectory("bench_sf1").toString
+    val refused = record(Bench.sf1Stage { ScaleUp.ensure(null, dir, dir, 10); "" })
+    assert(refused.get("sf1_error").asText.startsWith(
+      "java.lang.IllegalArgumentException: requirement failed: ScaleUp src == dst"))
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
@@ -14,30 +13,6 @@ import org.apache.spark.sql.types.LongType
   * schema, and a memoized read plans exactly as an inferring one.
   */
 class ParquetSchemasSpec extends SparkTestBase {
-
-  /** The stages of every job `body` starts. A fence job runs after it
-    * and the listener waits for that job's start: the bus delivers
-    * events in order, so every earlier job has been seen by then. */
-  private def jobsOf(body: => Unit): Seq[Seq[StageInfo]] = {
-    val fenceName = s"fence-${java.util.UUID.randomUUID()}"
-    val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.job.description") == fenceName))
-          fenced.countDown()
-        else jobs.add(j.stageInfos)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(fenceName)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fenced.await(60, TimeUnit.SECONDS), "the fence job was never seen")
-    } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
 
   private def inferenceJobs(jobs: Seq[Seq[StageInfo]]): Seq[Seq[StageInfo]] =
     jobs.filter(_.exists(Harness.isSchemaInference))
@@ -52,13 +27,71 @@ class ParquetSchemasSpec extends SparkTestBase {
     dir.toString
   }
 
+  test("a first Tables.load of a table starts no Spark job") {
+    val dir = copyOf("customer")
+    val first = jobsOf(Tables.load(spark, dir, "customer"))
+    assert(first.isEmpty, first.map(_.map(_.name)))
+  }
+
   test("a second Tables.load of a table starts no Spark job") {
     val dir = copyOf("orders")
-    val first = jobsOf(Tables.load(spark, dir, "orders"))
-    assert(first.nonEmpty && first.forall(_.exists(Harness.isSchemaInference)), first.map(_.map(_.name)))
+    Tables.load(spark, dir, "orders")
     val again = jobsOf(Tables.load(spark, dir, "orders"))
     assert(again.isEmpty, again.map(_.map(_.name)))
     assert(Tables.load(spark, dir, "orders").count() == spark.read.parquet(s"$dir/orders.parquet").count())
+  }
+
+  /** `ParquetSchemas.read(paths)` in a new session (so nothing is
+    * memoized) against `spark.read.parquet(paths)` in the same session:
+    * the same schema, field metadata included, or the same error. */
+  private def assertSameAsSpark(paths: String*)(configure: SparkSession => Unit = _ => ()): Unit = {
+    val fresh = spark.newSession()
+    configure(fresh)
+    var ours: scala.util.Try[org.apache.spark.sql.types.StructType] = null
+    assert(jobsOf { ours = scala.util.Try(ParquetSchemas.read(fresh, paths: _*).schema) }.isEmpty, paths)
+    val theirs = scala.util.Try(fresh.read.parquet(paths: _*).schema)
+    (ours, theirs) match {
+      case (scala.util.Success(o), scala.util.Success(t)) =>
+        assert(o == t, paths)
+        assert(o.json == t.json, paths)
+      case (scala.util.Failure(o), scala.util.Failure(t)) =>
+        assert((o.getClass, o.getMessage) == ((t.getClass, t.getMessage)), paths)
+      case other => fail(s"$paths: $other")
+    }
+  }
+
+  test("the schema read on the driver is the schema Spark infers") {
+    for (d <- Seq("sf0.001", "sf0.01", "sf0.1"); n <- Seq("region", "nation", "customer",
+        "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"))
+      assertSameAsSpark(s"/root/testdata/$d/$n.parquet")()
+    val dir = java.nio.file.Files.createTempDirectory("schema_driver").toString
+    // a Spark-written directory of several files, with field metadata
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("doc", "a key").build()
+    spark.range(30).select(col("id").as("k", meta), (col("id") % 4).cast("int").as("j"),
+        col("id").cast("string").as("s"))
+      .repartition(3).write.parquet(s"$dir/spark.parquet")
+    assertSameAsSpark(s"$dir/spark.parquet")()
+    // several paths with different schemas: the first file by path wins
+    spark.range(3).select(col("id").as("a")).write.parquet(s"$dir/m1")
+    spark.range(3).select(col("id").as("b"), col("id").as("c")).write.parquet(s"$dir/m2")
+    assertSameAsSpark(s"$dir/m2", s"$dir/m1")()
+    // a partitioned directory: the partition column comes from the listing
+    spark.range(20).select(col("id"), (col("id") % 3).as("k"))
+      .write.partitionBy("k").parquet(s"$dir/parted.parquet")
+    assertSameAsSpark(s"$dir/parted.parquet")()
+    // summary files win over the data files, even one whose name sorts first
+    spark.range(3).select(col("id").as("x")).write
+      .option("parquet.summary.metadata.level", "ALL").parquet(s"$dir/summarized")
+    assert(new java.io.File(s"$dir/summarized/_common_metadata").exists())
+    spark.range(3).select(col("id").as("y")).coalesce(1).write.parquet(s"$dir/other")
+    java.nio.file.Files.copy(new java.io.File(s"$dir/other").listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath,
+      java.nio.file.Paths.get(s"$dir/summarized/a.parquet"))
+    assertSameAsSpark(s"$dir/summarized")()
+    // INT64 TIMESTAMP(NANOS): a long under nanosAsLong, an error without it
+    val nanos = getClass.getResource("/fixtures/ts_nanos.parquet").getPath
+    for (v <- Seq("true", "false"))
+      assertSameAsSpark(nanos)(_.conf.set("spark.sql.legacy.parquet.nanosAsLong", v))
   }
 
   test("rewriting a directory with a different schema is picked up") {
@@ -149,19 +182,18 @@ class ParquetSchemasSpec extends SparkTestBase {
     }
   }
 
-  test("a second run of the registry_mix queries starts no schema inference outside a scratch catalog") {
+  test("the registry_mix queries start no schema inference job") {
     val names = Seq("sql_write_roundtrip", "panel_pipeline", "ann_bruteforce_topk", "basket_pairs",
       "group_quantiles", "dedup_simhash", "normalize_text", "trivial_row_filter",
       "interval_band_join", "token_freq_spectrum", "embedding_quantize")
     def runAll(): Unit = names.foreach { n =>
       assert(Harness.timed(spark, sf, SparkEntry.queries(n)).isRight, n)
     }
-    runAll()
-    val inference = inferenceJobs(jobsOf(runAll())).flatten.map(_.name)
-    // sql_write_roundtrip commits to a fresh scratch catalog every run:
-    // its snapshot tables are new files, inferred once each
-    val (scratch, other) = inference.partition(_.startsWith("inferSchema at GraftTableCatalog.scala"))
-    assert(other.isEmpty, other)
-    assert(scratch.nonEmpty)
+    // a second run too: sql_write_roundtrip commits to a fresh scratch
+    // catalog every run, and its snapshot tables are new files each time
+    for (run <- 1 to 2) {
+      val inference = inferenceJobs(jobsOf(runAll())).flatten.map(_.name)
+      assert(inference.isEmpty, s"run $run: $inference")
+    }
   }
 }

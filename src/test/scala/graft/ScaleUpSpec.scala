@@ -1,11 +1,17 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ScaleUp must multiply row counts, preserve referential integrity
   * per replica, keep replica 0 byte-identical, and keep blocking-key
   * group sizes CONSTANT (not growing) so pair workloads scale
-  * linearly with the factor.
+  * linearly with the factor. It starts one Spark job per table written,
+  * its footer strides equal the aggregate `max(key) + 1`, and two runs
+  * over one input write the same files.
   */
 class ScaleUpSpec extends SparkTestBase {
 
@@ -77,5 +83,95 @@ class ScaleUpSpec extends SparkTestBase {
       3 * base.select(col("user_id")).distinct().count())
     assert(ev.agg(min(col("ts")), max(col("ts"))).first() ==
       base.agg(min(col("ts")), max(col("ts"))).first())
+  }
+
+  private val names = Seq("region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings")
+
+  private val keys = Map("customer" -> Seq("c_custkey"), "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"), "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id", "label"),
+    "events" -> Seq("event_id", "user_id"))
+
+  private def aggregateStrides(df: DataFrame, cs: Seq[String]): Seq[Long] = {
+    val r = df.select(cs.map(c => max(col(c)).cast("long")): _*).first()
+    cs.indices.map(r.getLong(_) + 1L)
+  }
+
+  test("a run starts exactly one Spark job per table written") {
+    val dir = Files.createTempDirectory("graft_sf_jobs").toString
+    val jobs = jobsOf(ScaleUp.run(spark, "/root/testdata/sf0.01", dir, 3))
+    assert(jobs.size == names.size, jobs.map(_.map(_.name)))
+  }
+
+  test("footer strides equal the aggregate max(key) + 1") {
+    for (d <- Seq("sf0.001", "sf0.01", "sf0.1"); (n, cs) <- keys) {
+      val df = Tables.load(spark, s"/root/testdata/$d", n)
+      assert(ScaleUp.strides(df, cs) == aggregateStrides(df, cs), s"$d $n")
+    }
+    // Spark-written: several files of several row groups, null keys,
+    // negative keys, and an int key
+    val path = Files.createTempDirectory("graft_strides").resolve("t.parquet").toString
+    spark.range(0, 40000)
+      .select(when(col("id") % 10 =!= 0, col("id") * 7 - 1000).as("k"),
+        (col("id") % 977).cast("int").as("j"))
+      .repartition(3).write.option("parquet.block.size", "4096").parquet(path)
+    val df = spark.read.parquet(path)
+    assert(df.inputFiles.length == 3)
+    val groups = df.inputFiles.map { f =>
+      ParquetSchemas.footer(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf()),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER).getBlocks.size
+    }
+    assert(groups.forall(_ > 1), groups.toSeq)
+    assert(ScaleUp.strides(df, Seq("k", "j")) == aggregateStrides(df, Seq("k", "j")))
+  }
+
+  test("a source without column statistics fails the run, naming file and column") {
+    val src = Files.createTempDirectory("graft_nostats_src").toString
+    names.filterNot(_ == "customer").foreach { n =>
+      Files.copy(new File(s"$sf/$n.parquet").toPath, new File(s"$src/$n.parquet").toPath)
+    }
+    spark.read.parquet(s"$sf/customer.parquet").coalesce(1).write
+      .option("parquet.column.statistics.enabled", "false").parquet(s"$src/customer.parquet")
+    val file = new File(s"$src/customer.parquet").listFiles().map(_.getName)
+      .find(_.endsWith(".parquet")).get
+    val out = Files.createTempDirectory("graft_nostats_out").toString
+    val e = intercept[IllegalStateException](ScaleUp.ensure(spark, src, out, 2))
+    assert(e.getMessage.contains(file) && e.getMessage.contains("c_custkey"), e.getMessage)
+    assert(!new File(s"$out/_GRAFT_SCALE_DONE").exists())
+  }
+
+  test("a failed write is rethrown after every other write has finished") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      val e = intercept[IllegalArgumentException](ScaleUp.all(pool, Seq(
+        () => throw new IllegalArgumentException("boom"),
+        () => { Thread.sleep(300); finished.set(true) })))
+      assert(e.getMessage == "boom")
+      assert(finished.get)
+    } finally pool.shutdown()
+  }
+
+  test("two runs over one input write equal files") {
+    val Seq(a, b) = Seq("graft_sf_a", "graft_sf_b").map { p =>
+      val d = Files.createTempDirectory(p).toString
+      ScaleUp.run(spark, sf, d, 2)
+      d
+    }
+    for (n <- names) {
+      // the part files of a table, in part-number order
+      def parts(d: String) = new File(s"$d/$n.parquet").listFiles().map(_.getName)
+        .filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
+          .map(f => s"$d/$n.parquet/$f").toSeq
+      val (pa, pb) = (parts(a), parts(b))
+      assert(pa.size == pb.size && pa.nonEmpty, n)
+      assert(spark.read.parquet(s"$a/$n.parquet").schema.json ==
+        spark.read.parquet(s"$b/$n.parquet").schema.json, n)
+      def rows(files: Seq[String]) = files.flatMap(f => spark.read.parquet(f).collect().toSeq)
+      assert(rows(pa) == rows(pb), n)
+    }
   }
 }
