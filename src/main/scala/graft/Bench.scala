@@ -1,6 +1,8 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 object Bench {
@@ -30,15 +32,35 @@ object Bench {
     else (merged("queries", "queries_floor"), merged("sf1_queries", "sf1_floor"))
   }
 
+  /** `"<class>: <message>"`: the form of every failure reason in the
+    * record. */
+  def reason(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
+
   /** The sf1 stage's keys, or, when the stage fails, an
     * `"sf1_error":"<class>: <message>"` key in their place: a failed
     * ScaleUp, or the refusal to scale a corpus into itself, shows in
     * the record instead of as missing keys. */
   def sf1Stage(keys: => String): String =
     try keys catch {
-      case e: Throwable =>
-        ",\"sf1_error\":" + new ObjectMapper().writeValueAsString(s"${e.getClass.getName}: ${e.getMessage}")
+      case e: Throwable => ",\"sf1_error\":" + new ObjectMapper().writeValueAsString(reason(e))
     }
+
+  /** One full evaluation of query `name` over `dir` (see
+    * Harness.timed): its seconds, or -1.0 on failure, whose reason then
+    * goes into `errors` under `name`. */
+  def time(spark: SparkSession, dir: String, name: String, fn: Harness.Query,
+      errors: mutable.Map[String, String]): Double =
+    Harness.timed(spark, dir, fn) match {
+      case Right((t, _)) => t
+      case Left(e) => errors(name) = reason(e); -1.0
+    }
+
+  /** The `"<key>":{query: reason}` entry of a stage's failed runs,
+    * sorted by query; nothing when no run failed. A query whose retry alone
+    * failed keeps its valid first reading and still has an entry. */
+  def errorsJson(key: String, errors: collection.Map[String, String]): String =
+    if (errors.isEmpty) ""
+    else s""","$key":""" + new ObjectMapper().writeValueAsString(new java.util.TreeMap(errors.asJava))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,20 +72,19 @@ object Bench {
       Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
         .foreach(t => Tables.load(spark, sfDir, t).count())
       spark.range(1000000L).selectExpr("sum(id)").collect()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => System.err.println(s"[bench] warm-up failed: ${reason(e)}") }
     // Lane pre-warm (VERDICT r8 #2), OUTSIDE any timed window, so a
     // cold target/lane_cache does not charge the first consumer query
     // with the ~10 s lsh-pair / ~1.8 s knn-graph build (Harness.prewarm)
     Harness.prewarm(spark, sfDir)
-    // one full evaluation, -1.0 on failure (see Harness.timed)
-    def time(dir: String, fn: Harness.Query): Double =
-      Harness.timed(spark, dir, fn).fold(_ => -1.0, _._1)
+    // each stage's failed runs: query -> "<class>: <message>"
+    val (errors, sf1Errors) = (mutable.Map.empty[String, String], mutable.Map.empty[String, String])
     // min of two timed runs: wall-clock on a shared box drifts +-40%
     // with ambient load; the min is the plan's cost. -1.0 whenever
     // EITHER run fails: a flaky query must read as failed, not as the
     // surviving run's time
-    def minOf2(dir: String, fn: Harness.Query): Double = {
-      val (t1, t2) = (time(dir, fn), time(dir, fn))
+    def minOf2(dir: String, errs: mutable.Map[String, String])(n: String, fn: Harness.Query): Double = {
+      val (t1, t2) = (time(spark, dir, n, fn, errs), time(spark, dir, n, fn, errs))
       if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2)
     }
     // Ambient-load immunity (VERDICT r10 #1): the box this bench shares
@@ -83,7 +104,10 @@ object Bench {
     // timings are fixed-overhead noise where 1.5x is meaningless).
     val (priorsSf, priorsSf1) =
       try priors(java.nio.file.Files.readString(java.nio.file.Paths.get("bench_last.json")), sfDir)
-      catch { case _: Throwable => (Map.empty[String, Double], Map.empty[String, Double]) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] no retry priors: ${reason(e)}")
+        (Map.empty[String, Double], Map.empty[String, Double])
+      }
     // 1.3x trigger below a 2 s prior (VERDICT r11 "What's wrong" #1):
     // absolute jitter dominates small numbers, so a trivial query can
     // drift 1.48x and sit in the blind spot between "retry" and
@@ -151,14 +175,15 @@ object Bench {
       * deferred retry pass — AFTER the whole stage, so the ambient
       * spike that hit a query mid-stage has had the rest of the stage
       * to dissipate. Returns (final readings, suspect first readings). */
-    def stage(dir: String, prior: Map[String, Double], order: Seq[(String, Harness.Query)])(
-        first: Harness.Query => Double): (Map[String, Double], Map[String, Double]) = {
-      val firstPass = order.map { case (n, fn) => n -> first(fn) }
+    def stage(dir: String, prior: Map[String, Double], order: Seq[(String, Harness.Query)],
+        errs: mutable.Map[String, String])(
+        first: (String, Harness.Query) => Double): (Map[String, Double], Map[String, Double]) = {
+      val firstPass = order.map { case (n, fn) => n -> first(n, fn) }
       val retried = firstPass.filter { case (n, t) => suspect(t, prior.get(n)) }.toMap
       val results = firstPass.map { case (n, t) =>
         if (!retried.contains(n)) n -> t
         else {
-          val re = minOf2(dir, SparkEntry.queries(n))
+          val re = minOf2(dir, errs)(n, SparkEntry.queries(n))
           n -> (if (re < 0) t else math.min(t, re))
         }
       }.toMap
@@ -174,7 +199,7 @@ object Bench {
       if (retried.isEmpty) "" else s""","$key":${toJson(retried)}"""
 
     val calibSec = calibrate()
-    val (results, retried) = stage(sfDir, priorsSf, benchOrder)(minOf2(sfDir, _))
+    val (results, retried) = stage(sfDir, priorsSf, benchOrder, errors)(minOf2(sfDir, errors))
     val total = if (results.nonEmpty) results.values.sum else 0.0
 
     // Second scale factor (VERDICT r01 #9): derive a 10x corpus from
@@ -219,15 +244,15 @@ object Bench {
         // dominated by fixed overhead and don't need it). The valid
         // first measurement stands if only the re-run fails (transient
         // load) — a real failure shows as t1 < 0.
-        val (r1, sf1Retried) = stage(sf1Dir, priorsSf1, benchOrder.filterNot(q => sf1Skip(q._1))) { fn =>
-          val t1 = time(sf1Dir, fn)
+        val (r1, sf1Retried) = stage(sf1Dir, priorsSf1, benchOrder.filterNot(q => sf1Skip(q._1)), sf1Errors) { (n, fn) =>
+          val t1 = time(spark, sf1Dir, n, fn, sf1Errors)
           if (t1 < 1.0) t1
-          else { val t2 = time(sf1Dir, fn); if (t2 < 0) t1 else math.min(t1, t2) }
+          else { val t2 = time(spark, sf1Dir, n, fn, sf1Errors); if (t2 < 0) t1 else math.min(t1, t2) }
         }
-        s""","sf1_queries":${toJson(r1)},"sf1_total":${r1.values.filter(_ > 0).sum},"sf1_factor":10,"calib_sf1_sec":$calibSf1,"sf1_floor":${toJson(floorOf(r1, priorsSf1))}${retriedJson("sf1_retried", sf1Retried)}"""
+        s""","sf1_queries":${toJson(r1)},"sf1_total":${r1.values.filter(_ > 0).sum},"sf1_factor":10,"calib_sf1_sec":$calibSf1,"sf1_floor":${toJson(floorOf(r1, priorsSf1))}${retriedJson("sf1_retried", sf1Retried)}${errorsJson("sf1_errors", sf1Errors)}"""
       }
 
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"sf":"$sfDir","calib_sec":$calibSec,"queries_floor":${toJson(floorOf(results, priorsSf))}$sf1Extra${retriedJson("retried", retried)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"sf":"$sfDir","calib_sec":$calibSec,"queries_floor":${toJson(floorOf(results, priorsSf))}$sf1Extra${retriedJson("retried", retried)}${errorsJson("errors", errors)}}"""
     println(line)
     // the full-precision record the NEXT run's retry pass compares
     // against (BENCH_r*.json keeps only a stdout tail); committed per
@@ -239,7 +264,7 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_BENCH_RECORD", "1") != "0")
       try java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
         (line + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => }
+      catch { case e: Throwable => System.err.println(s"[bench] bench_last.json not written: ${reason(e)}") }
     spark.stop()
   }
 }

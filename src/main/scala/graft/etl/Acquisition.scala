@@ -10,6 +10,7 @@ import scala.util.matching.Regex
   * I/O so they are testable in a zero-egress environment. These are
   * NOT Spark operators by design — tiny, sequential, cache-aware
   * (reference process_aspep/assets.py:168-267, 549-568).
+  * Kept though no main calls it: the paper's scrape and download stages.
   */
 object Acquisition {
 

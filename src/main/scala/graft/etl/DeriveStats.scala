@@ -32,12 +32,7 @@ object DeriveStats {
     metrics.filter(df.columns.contains)
   }
 
-  /** @param approxMedian use percentile_approx for the cross-section
-    *   medians — the 100 TB escape hatch (mergeable sketch, no per-group
-    *   buffering). NEVER in the oracle path: the reference's golden
-    *   checks are exact-median under rel_tol 1e-3 (SURVEY §7.4.7).
-    */
-  def deriveStats(combined: DataFrame, approxMedian: Boolean = false): DataFrame = {
+  def deriveStats(combined: DataFrame): DataFrame = {
     def input(c: String): Column =
       if (combined.columns.contains(c)) col(c) else lit(null).cast(DoubleType)
     // X4 safe ratios (assets.py:351-356: 0-divisor and inf -> null)
@@ -50,9 +45,7 @@ object DeriveStats {
     val stateRows = withRatios.filter(col("`state code`") =!= "US")
 
     val sc = statCols(withRatios)
-    val medianAggs =
-      if (approxMedian) sc.map(c => percentile_approx(col(c), lit(0.5), lit(10000)).as(c))
-      else sc.map(c => median(col(c)).as(c))
+    val medianAggs = sc.map(c => median(col(c)).as(c))
     val meanAggs = sc.map(c => avg(col(c)).as(c))
 
     def statsRows(aggs: Seq[Column], label: String) =

@@ -44,6 +44,8 @@ object ExtendedStats {
     *   null-gapped series yields 0%-change runs instead of null. The
     *   default (false) is the plain lag ratio — the two differ only
     *   across null gaps and no golden check pins either (SURVEY §2.6 W2).
+    *   Kept as the switch docs/DIVERGENCES.md item 3 documents; only
+    *   `WindowSemanticsSpec` sets it.
     */
   def deriveExtendedStats(derived: DataFrame, padPct: Boolean = false): DataFrame = {
     val baseCols = DeriveStats.statCols(derived)

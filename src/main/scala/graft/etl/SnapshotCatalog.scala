@@ -5,13 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
-/** Atomic MULTI-TABLE snapshot commits — the missing piece between
-  * `Writers.publishVersioned` (one table, one pointer) and a
-  * transactional table format (VERDICT r7 "What's missing" #2 /
-  * "Next round" #5): a CDC merge that rewrites a fact table AND its
-  * summary must expose either both new versions or neither, and a
-  * reader mid-scan must never have a served directory deleted or
-  * mutated underneath it.
+/** Atomic MULTI-TABLE snapshot commits — the piece between a
+  * one-table pointer swap and a transactional table format (VERDICT
+  * r7 "What's missing" #2 / "Next round" #5): a CDC merge that
+  * rewrites a fact table AND its summary must expose either both new
+  * versions or neither, and a reader mid-scan must never have a
+  * served directory deleted or mutated underneath it.
   *
   * Layout (all paths under one catalog dir):
   * {{{
@@ -841,29 +840,6 @@ class SnapshotCatalog(catalogDir: String, segFold: Int = 64,
       clusterCol: String, numFiles: Int): Int =
     compactClusteredFrom(spark, table, clusterCol, numFiles, snapshot())
 
-  /** The operational form of [[compact]]: on a conflict abort (a
-    * delete/append landed mid-rewrite), re-snapshot — picking up the
-    * concurrent writer's work — and retry, up to `attempts` times.
-    * Each retry folds the NEWLY landed deletes/appends too, so the
-    * rewrite converges instead of starving as long as the churn rate
-    * is below one commit per rewrite. This is the loop Iceberg's
-    * rewrite action runs; the gate stays abort-based underneath so a
-    * caller that wants custom backoff can drive [[compactFrom]]
-    * directly. */
-  def compactWithRetry(spark: SparkSession, table: String,
-      numFiles: Int = 1, attempts: Int = 3): Int = {
-    var left = attempts
-    while (true) {
-      try return compactFrom(spark, table, numFiles, snapshot())
-      catch {
-        case e: SnapshotCatalog.ConflictException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** [[compactClustered]] from an explicit base snapshot — same
     * conflict gate as [[compactFrom]] (a clustering rewrite racing a
     * delete/append must abort, not discard it). */
@@ -892,30 +868,7 @@ class SnapshotCatalog(catalogDir: String, segFold: Int = 64,
     dropManifests(all, all.dropRight(keep).filterNot(pinned))
   }
 
-  /** TIME-based retention (the Iceberg expire_snapshots contract):
-    * drop every manifest older than `olderThanMs`, always retaining
-    * the newest `retainLast` and every ref-pinned manifest, then
-    * reclaim the version/delete dirs no retained manifest references.
-    * Age is the commit wall-time stamped INSIDE the manifest body
-    * (`_ts`, portable across object-store copies that don't preserve
-    * mtime — VERDICT r11 opt #8), falling back to the manifest file's
-    * mtime for pre-stamp manifests. Returns the number expired. At 100 TB
-    * this is the scheduled job that bounds catalog metadata and
-    * storage: time travel stays available inside the retention
-    * window, tags pin audit points past it. */
-  def expireSnapshots(olderThanMs: Long, retainLast: Int = 1): Int = {
-    val cur = currentId.getOrElse(return 0)
-    val all = (1 to cur).filter(k => Files.exists(manifestPath(k)))
-    val pinned = refs.values.map(_._1).toSet
-    val keepNewest = all.takeRight(math.max(1, retainLast)).toSet
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val drop = all.filter(k => !keepNewest(k) && !pinned(k) &&
-      commitMs(k) < cutoff)
-    dropManifests(all, drop)
-    drop.size
-  }
-
-  /** Shared retention tail: delete `drop`'s manifests and every dir
+  /** [[vacuum]]'s retention tail: delete `drop`'s manifests and every dir
     * they own that no retained manifest still references. The pinned
     * ref set is RE-VERIFIED immediately before each manifest delete
     * (ADVICE r11 #4): a setRef racing this retention job may publish a

@@ -63,62 +63,6 @@ object Writers {
   def parquetByYear(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").partitionBy("year").parquet(path)
 
-  /** K3b: RE-RUN-SAFE partition upsert (the "parquet/delta output"
-    * north star, BASELINE.json): dynamic partition overwrite replaces
-    * ONLY the year partitions present in `df`, leaving every other
-    * year's files untouched — so re-publishing one revised year (the
-    * reference's per-year rebuild shape) is idempotent: running the
-    * same write twice converges to the same table state, and a re-run
-    * after a partial failure simply overwrites the affected partitions
-    * again. Static overwrite (parquetByYear) remains the
-    * full-table-rebuild publish.
-    */
-  def upsertYearPartitions(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year").parquet(path)
-
-  /** Versioned atomic publish — the minimal snapshot-isolation
-    * contract a table format provides, built from two filesystem
-    * primitives every object store offers: write-new-directory, then
-    * atomically swap a small pointer file. Each publish writes a fresh
-    * `v=<n>` directory (never mutating a served one) and then renames
-    * `_latest.tmp` -> `_latest` (atomic on POSIX; on S3 the pointer
-    * is one small PUT, which is atomic per-object). Readers resolve
-    * `_latest` first, so they always see a COMPLETE snapshot: a crash
-    * after data files land but before the pointer swap leaves the
-    * previous version served and the half-written directory invisible
-    * (re-publish overwrites it). This is the Iceberg/Delta pointer
-    * idea with a version counter instead of a log — enough for the
-    * single-writer publish cadence of this pipeline.
-    */
-  def publishVersioned(df: DataFrame, tableDir: String): Int = {
-    val dir = Paths.get(tableDir)
-    Files.createDirectories(dir)
-    val next = currentVersion(tableDir).getOrElse(0) + 1
-    df.write.mode("overwrite").parquet(s"$tableDir/v=$next")
-    val tmp = dir.resolve("_latest.tmp")
-    Files.write(tmp, next.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve("_latest"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    next
-  }
-
-  def currentVersion(tableDir: String): Option[Int] = {
-    val p = Paths.get(tableDir, "_latest")
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toInt)
-    else None
-  }
-
-  /** Reader side of publishVersioned: the latest COMMITTED snapshot. */
-  def readVersioned(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame = {
-    val v = currentVersion(tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed version under $tableDir"))
-    graft.ParquetSchemas.read(spark, s"$tableDir/v=$v")
-  }
-
   /** The JSON text of a non-null cell of type `dt`, as pandas renders
     * the same column: integers as numbers, a decimal as its double, a
     * date or timestamp as epoch milliseconds (truncated toward zero, so

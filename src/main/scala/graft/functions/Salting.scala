@@ -3,15 +3,11 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for hot join keys. AQE's skew-join split
-  * (spark.sql.adaptive.skewJoin) is the first answer; explicit salting
-  * is the fallback when the skew is on the BUILD side of a non-sort-
-  * merge join, or on a groupBy key (AQE cannot split a hash aggregate).
-  *
-  * Pattern: fan the skewed (left) side into `buckets` sub-keys with a
-  * deterministic salt, replicate the right side across all bucket
-  * values, join on (key, salt). The shuffle then spreads each hot key
-  * over `buckets` reducers.
+/** Skew mitigation for hot groupBy keys: AQE's skew-join split
+  * (spark.sql.adaptive.skewJoin) handles skewed joins, but it cannot
+  * split a hash aggregate. Salting fans each key into `buckets`
+  * sub-keys with a deterministic salt, so the first shuffle spreads a
+  * hot key over `buckets` reducers.
   */
 object Salting {
 
@@ -20,18 +16,6 @@ object Salting {
     */
   def salt(seedCol: Column, buckets: Int): Column =
     pmod(hash(seedCol), lit(buckets))
-
-  /** Salted inner equi-join of a skewed left side against a smaller
-    * right side. `leftSeed` picks the salt (any stable, high-cardinality
-    * column, e.g. the left table's primary key).
-    */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-                 leftSeed: String, buckets: Int): DataFrame = {
-    val saltedLeft = left.withColumn("__salt", salt(col(leftSeed), buckets))
-    val replicatedRight = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    saltedLeft.join(replicatedRight, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Two-phase salted aggregation for skewed groupBy keys: partial
     * aggregate on (key, salt), then final aggregate on key. Caller

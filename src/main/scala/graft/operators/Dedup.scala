@@ -1573,18 +1573,16 @@ object Dedup {
     chunkSpectrum(chunkPairCounts(
       Tables.documents(s, d).select(col("doc_id"), col("text"))))
 
-  /** Per-(chunk_hash, doc_id) instance counts — the sum-mergeable lane
-    * the streaming twin carries as state (a micro-batch's partials
-    * merge by addition; Spark's own count-distinct rewrite builds this
-    * same pair grouping internally, so splitting it out costs nothing).
+  /** Per-(chunk_hash, doc_id) instance counts — a sum-mergeable lane
+    * (Spark's own count-distinct rewrite builds this same pair
+    * grouping internally, so splitting it out costs nothing).
     */
   private[graft] def chunkPairCounts(docs: DataFrame): DataFrame =
     contentChunks(docs)
       .groupBy(col("chunk_hash"), col("doc_id"))
       .agg(count(lit(1)).as("cnt"), min(col("n_tokens")).as("len"))
 
-  /** Spectrum readout over the pair-count lane (batch and the
-    * streaming monitor's per-trigger readout share this exactly). */
+  /** Spectrum readout over the pair-count lane. */
   private[graft] def chunkSpectrum(pairCounts: DataFrame): DataFrame =
     pairCounts
       .groupBy(col("chunk_hash"))

@@ -293,14 +293,13 @@ object Profile {
     * DECIMAL(38,0) lane holds while N·n < 1e16 per feature (≈ 1e8
     * docs); beyond that, shard the census by partition-date and SUM
     * the count rows before the ratio step (counts are the mergeable
-    * state, exactly like the streaming twin's registers).
+    * state).
     */
   /** The (feature, bucket) count table the census is built from — ONE
     * scan of the docs frame (the three lanes explode from an inline
     * array, not a 3-way self-union that would scan the corpus three
     * times), one map-side-combining aggregate. Counts are the
-    * mergeable state: the streaming twin runs THIS aggregation in
-    * complete mode and the batch census applies the ratio step on top.
+    * mergeable state; the census applies the ratio step on top.
     */
   private[graft] def driftCounts(docs: DataFrame): DataFrame = {
     val lanes = docs.select(

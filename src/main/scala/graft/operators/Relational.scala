@@ -246,8 +246,7 @@ object Relational {
       .orderBy(col("metric").asc_nulls_last, col("event_id"))
   }
 
-  /** Tumbling event-time window aggregation (epoch-hour buckets) — the
-    * batch shape of the streaming pipeline in graft.streaming. */
+  /** Tumbling event-time window aggregation (epoch-hour buckets). */
   def eventWindowAgg(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(
@@ -270,8 +269,7 @@ object Relational {
         max(col("k")).as("max_k"), round(avg(col("k")), 6).as("avg_k"))
 
   /** Gap-based sessionization (30-min inactivity boundary) as a pure
-    * window computation — the batch twin of the stateful streaming
-    * sessionizer in graft.streaming. One shuffle on user_id.
+    * window computation. One shuffle on user_id.
     */
   def eventsSessionize(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))

@@ -483,9 +483,8 @@ object Sketch {
     * 4096-row register tables, map-side partials, merged in O(m).
     */
   /** CM/AGMS register build for one table side: 4 rows x 1024 buckets,
-    * unsigned count + signed sum per register. Shared by the batch
-    * estimator and the streaming register twin (the same aggregate is
-    * sum-mergeable across stream triggers).
+    * unsigned count + signed sum per register (a sum-mergeable
+    * aggregate).
     */
   private[graft] def registerSketch(df: DataFrame, key: Column): DataFrame =
     df.select(key.cast("string").as("k"))

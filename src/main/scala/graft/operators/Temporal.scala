@@ -493,9 +493,8 @@ object Temporal {
         Tables.customer(s, d), Tables.nation(s, d)))
 
   /** Shared (nation, month) exact-cents revenue lane — the corpus-
-    * sized stage under both trend estimators AND the streaming OLS
-    * twin (the lane is SUM-mergeable: micro-batch partials merge by
-    * addition, so the stream carries it as plain aggregation state).
+    * sized stage under both trend estimators (the lane is
+    * SUM-mergeable: partials merge by addition).
     */
   private[graft] def monthlyRevenueCents(orders: DataFrame,
       customer: DataFrame, nation: DataFrame): DataFrame =
@@ -576,10 +575,8 @@ object Temporal {
     cusum(dailyCounts(Tables.events(s, d)))
 
   /** The (event_type, epoch-day) count table cusum_drift monitors —
-    * plain sum-mergeable aggregation state, shared with the streaming
-    * twin (StreamingOps.cusumStream runs THIS aggregation in complete
-    * mode; the CUSUM window step is a bounded-table computation a
-    * monitor applies per trigger, the driftStream discipline). */
+    * plain sum-mergeable aggregation state; the CUSUM window step runs
+    * over this bounded table. */
   private[graft] def dailyCounts(events: DataFrame): DataFrame =
     events.groupBy(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"))

@@ -510,8 +510,7 @@ object TrainPrep {
     * − ln(c+1))·1e9), two ln calls on integer-valued doubles with ONE
     * rounding (the bigram_lm_score discipline) — then per-doc exact
     * long sums over token OCCURRENCES (no per-(doc, term) tf stage;
-    * the occurrence left-join ≡ Σ tf·nll, importanceStream's
-    * identity). Only the final avg divides, with one 6dp rounding.
+    * the occurrence left-join ≡ Σ tf·nll). Only the final avg divides, with one 6dp rounding.
     *
     * Shape: training counts aggregate keyed on term (vocabulary-
     * sized); scalars T, V, and the OOV penalty ride ONE broadcast

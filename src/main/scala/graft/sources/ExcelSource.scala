@@ -26,7 +26,7 @@ import scala.jdk.CollectionConverters._
   * one InputPartition per workbook — the shape that scales to many
   * files even though each file is small). SURVEY.md §2.1 S3 marks this
   * optional polish over driver-side createDataFrame; both paths share
-  * ExcelReader.
+  * ExcelReader. Kept though no main calls it: the `graft-excel` format.
   */
 class ExcelSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-excel"

@@ -296,7 +296,8 @@ object GraftTableCatalog {
     * (VERDICT r12 opt #8, probe-justified: a fresh
     * `GraftSnapshotTable` per SQL statement costs ~1.3 s of
     * re-planning on a 256-dir table — schema inference + the eager
-    * file-index listing — measured by `MetaProbe plancache`). The key
+    * file-index listing — measured; docs/PLANS.md "loadTable cache"
+    * holds the numbers). The key
     * is (session, catalog path, table, dir-list token, delete token):
     * any commit that changes what the table serves changes its token,
     * so a hit is correct BY VALUE — same dirs, same sidecars, same

@@ -1,13 +1,12 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** `Bench.priors`: the retry priors read from a previous run's
-  * `bench_last.json`; `Bench.sf1Stage`: a failed sf1 stage leaves its
-  * reason in the record. */
-class BenchSpec extends AnyFunSuite {
+  * `bench_last.json`; `Bench.sf1Stage` and `Bench.time`: a failed sf1
+  * stage, and a failed query, leave their reasons in the record. */
+class BenchSpec extends SparkTestBase {
 
   test("a prior written with a negative exponent reads as its value") {
     val (p, _) = Bench.priors("""{"sf":"d","queries":{"a":1.0E-4,"b":2.5}}""", "d")
@@ -44,5 +43,18 @@ class BenchSpec extends AnyFunSuite {
     val refused = record(Bench.sf1Stage { ScaleUp.ensure(null, dir, dir, 10); "" })
     assert(refused.get("sf1_error").asText.startsWith(
       "java.lang.IllegalArgumentException: requirement failed: ScaleUp src == dst"))
+  }
+
+  test("a query that throws reads -1.0 and leaves its class and message in errors") {
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    val t = Bench.time(spark, sf, "boom",
+      (_, _) => throw new IllegalStateException("no \"rows\" here"), errors)
+    assert(t == -1.0)
+    assert(errors == Map("boom" -> "java.lang.IllegalStateException: no \"rows\" here"))
+    assert(Bench.time(spark, sf, "ok", (s, _) => s.range(3).toDF(), errors) >= 0)
+    assert(errors.keySet == Set("boom"))
+    val record = new ObjectMapper().readTree(s"""{"metric":"total"${Bench.errorsJson("errors", errors)}}""")
+    assert(record.get("errors").get("boom").asText == "java.lang.IllegalStateException: no \"rows\" here")
+    assert(Bench.errorsJson("errors", Map.empty) == "")
   }
 }

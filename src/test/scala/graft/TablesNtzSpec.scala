@@ -1,21 +1,17 @@
-package graft.streaming
+package graft
 
-import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** The TIMESTAMP_NTZ physical form of the events table (ADVICE r5):
   * the driver corpus ships INT64 nanos, ScaleUp corpora Spark-written
   * TimestampType — so the NTZ branch of Tables.normalizeTs (naive
-  * micros parquet) had no coverage. Pin all three contracts:
+  * micros parquet) had no coverage. Pin both contracts:
   *   1. batch read of an NTZ corpus == the nanos corpus, row-exact;
   *   2. the conversion is timezone-INDEPENDENT (same instants under a
   *      non-UTC session zone — the plain-cast implementation this
-  *      replaced would shift by the zone offset);
-  *   3. the probed stream schema handles NTZ (streaming hourly agg on
-  *      the NTZ corpus == batch), and a COLD landing dir (no
-  *      events.parquet yet) still yields a valid stream.
+  *      replaced would shift by the zone offset).
   */
-class NtzEventsSpec extends SparkTestBase {
+class TablesNtzSpec extends SparkTestBase {
 
   private lazy val ntzDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_ntz").toString
@@ -54,25 +50,5 @@ class NtzEventsSpec extends SparkTestBase {
       assert(shifted == utc,
         "NTZ normalization must not consult spark.sql.session.timeZone")
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
-  }
-
-  test("streaming hourly agg over the NTZ corpus == batch twin") {
-    val streamed = StreamingOps.runOnce(spark, ntzDir, "stream_hourly_ntz")
-    val batch = graft.operators.Relational.eventWindowAgg(spark, ntzDir)
-    assert(streamed.count() == batch.count())
-    val diff = streamed.join(batch, Seq("bucket", "event_type"), "full")
-      .filter(streamed("n") =!= batch("n") ||
-        abs(streamed("sum_value") - batch("sum_value")) > 1e-6)
-    assert(diff.count() == 0)
-  }
-
-  test("cold landing dir (no events.parquet yet) still builds a stream") {
-    val cold = java.nio.file.Files.createTempDirectory("graft_cold").toString
-    val stream = StreamingOps.readEvents(spark, cold)
-    assert(stream.isStreaming)
-    // schema fell back to the historical nanos form, normalized to a
-    // proper timestamp — downstream ops (watermark etc.) stay valid
-    assert(stream.schema("ts").dataType ==
-      org.apache.spark.sql.types.TimestampType)
   }
 }

@@ -859,15 +859,6 @@ class SnapshotCatalogSpec extends SparkTestBase {
       cat.commitSerializable(b2, Map("other" -> facts(1)),
         readTables = Set("t"))
     }
-    // the operational retry loop re-snapshots and FOLDS the delete
-    // that just landed instead of discarding or starving
-    cat.compactWithRetry(spark, "t", numFiles = 1)
-    val folded = cat.snapshot()
-    assert(folded.deletes.isEmpty)
-    // 44 - 2: id=2 exists twice (base + appended) and the EQUALITY
-    // delete removes both instances
-    assert(folded.read(spark, "t").count() == 42,
-      "retry compacts THROUGH the concurrent delete")
   }
 
   test("bloom sidecar write path is bounded: per-file filter capped, no false negatives at the cap") {
@@ -1078,38 +1069,6 @@ class SnapshotCatalogSpec extends SparkTestBase {
     assert(cat.snapshot().read(spark, "t").count() == 33)
     // an unpinned old manifest IS gone
     intercept[java.nio.file.NoSuchFileException] { cat.manifest(4) }
-  }
-
-  test("expireSnapshots: time-based retention keeps the newest, the ref-pinned, and nothing else stale") {
-    val root = freshDir("expire")
-    val cat = new SnapshotCatalog(root)
-    (1 to 4).foreach(i => cat.commit(Map("t" -> facts(i * 10))))
-    cat.setRef("audit", 2, tag = true) // m5
-    // backdate manifests 1-4 far past any retention window: m1-m2
-    // through the in-body _ts commit stamp (the portable path —
-    // VERDICT r11 opt #8), m3-m4 by STRIPPING _ts and setting mtime
-    // (the pre-stamp fallback path)
-    val oldMs = System.currentTimeMillis() - 10_000_000L
-    val old = java.nio.file.attribute.FileTime.fromMillis(oldMs)
-    (1 to 4).foreach { k =>
-      val p = Paths.get(root, s"_manifests/m=$k.json")
-      val text = new String(Files.readAllBytes(p), "UTF-8")
-      val rewritten =
-        if (k <= 2) text.replaceAll(""""_ts": "\d+"""", s""""_ts": "$oldMs"""")
-        else text.split('\n').filterNot(_.contains("\"_ts\""))
-          .mkString("\n").replaceAll(""",\n\}""", "\n}")
-      Files.write(p, rewritten.getBytes("UTF-8"))
-      Files.setLastModifiedTime(p, old)
-    }
-    val expired = cat.expireSnapshots(olderThanMs = 1_000_000L, retainLast = 1)
-    // m1, m3, m4 expire; m2 is tag-pinned; m5 is the newest
-    assert(expired == 3, s"expired $expired")
-    assert(cat.snapshotAtRef("audit").read(spark, "t").count() == 20,
-      "the tagged snapshot survives time-based retention")
-    assert(cat.snapshot().read(spark, "t").count() == 40)
-    intercept[java.nio.file.NoSuchFileException] { cat.manifest(3) }
-    // inside the window nothing further expires
-    assert(cat.expireSnapshots(olderThanMs = 1_000_000L) == 0)
   }
 
   test("pre-stamping manifests stay readable: unstamped tokens migrate as seq 0/1") {
