@@ -9,7 +9,11 @@ object Bench {
 
   /** Per-query retry priors (primary stage, sf1 stage) from the text of
     * a previous run's `bench_last.json`; none when that run's `sf`
-    * differs from `sfDir`. Each prior is the MIN of the latest reading
+    * differs from `sfDir`, or its `cpus` (the session's
+    * `defaultParallelism`) is absent or differs from `cpus`: readings
+    * from a host with another core count misfire the trigger (a
+    * 32-core record made a 4-core run retry 34 of its 220 queries).
+    * Each prior is the MIN of the latest reading
     * and the rolling per-query floor (ADVICE r13 #2): a prior
     * refreshed from a noisy run used to disarm the trigger — the
     * documented cause of the r12 basket_pairs false regression — but
@@ -17,7 +21,7 @@ object Bench {
     * "queries_floor"/"sf1_floor" keys) survives noisy rounds. A query
     * that legitimately got slower retries once per run against its
     * stale floor — one bounded min-of-2, not a wrong number. */
-  def priors(text: String, sfDir: String): (Map[String, Double], Map[String, Double]) = {
+  def priors(text: String, sfDir: String, cpus: Int): (Map[String, Double], Map[String, Double]) = {
     val root = new ObjectMapper().readTree(text)
     def section(label: String): Map[String, Double] =
       root.path(label).properties().asScala
@@ -28,7 +32,7 @@ object Bench {
         k -> math.min(l.getOrElse(k, Double.MaxValue), f.getOrElse(k, Double.MaxValue))
       }.toMap
     }
-    if (root.path("sf").asText() != sfDir) (Map.empty, Map.empty)
+    if (root.path("sf").asText() != sfDir || root.path("cpus").asInt(-1) != cpus) (Map.empty, Map.empty)
     else (merged("queries", "queries_floor"), merged("sf1_queries", "sf1_floor"))
   }
 
@@ -100,10 +104,12 @@ object Bench {
     // readings are emitted: the final min under the query's own key,
     // the suspect first reading in a "retried"/"sf1_retried" map.
     // Priors apply only when the file is readable and its recorded sf
-    // dir matches this run's, and only above a 0.5 s floor (sub-second
-    // timings are fixed-overhead noise where 1.5x is meaningless).
+    // dir and cpus match this run's, and only above a 0.5 s floor
+    // (sub-second timings are fixed-overhead noise where 1.5x is
+    // meaningless).
+    val cpus = spark.sparkContext.defaultParallelism
     val (priorsSf, priorsSf1) =
-      try priors(java.nio.file.Files.readString(java.nio.file.Paths.get("bench_last.json")), sfDir)
+      try priors(java.nio.file.Files.readString(java.nio.file.Paths.get("bench_last.json")), sfDir, cpus)
       catch { case e: Throwable =>
         System.err.println(s"[bench] no retry priors: ${reason(e)}")
         (Map.empty[String, Double], Map.empty[String, Double])
@@ -252,7 +258,7 @@ object Bench {
         s""","sf1_queries":${toJson(r1)},"sf1_total":${r1.values.filter(_ > 0).sum},"sf1_factor":10,"calib_sf1_sec":$calibSf1,"sf1_floor":${toJson(floorOf(r1, priorsSf1))}${retriedJson("sf1_retried", sf1Retried)}${errorsJson("sf1_errors", sf1Errors)}"""
       }
 
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"sf":"$sfDir","calib_sec":$calibSec,"queries_floor":${toJson(floorOf(results, priorsSf))}$sf1Extra${retriedJson("retried", retried)}${errorsJson("errors", errors)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"sf":"$sfDir","cpus":$cpus,"calib_sec":$calibSec,"queries_floor":${toJson(floorOf(results, priorsSf))}$sf1Extra${retriedJson("retried", retried)}${errorsJson("errors", errors)}}"""
     println(line)
     // the full-precision record the NEXT run's retry pass compares
     // against (BENCH_r*.json keeps only a stdout tail); committed per

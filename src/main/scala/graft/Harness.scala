@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * runMain graft.Harness time    <sfDir> <query>...  # 2 timed runs each, warm lanes
   * runMain graft.Harness probe   <sfDir> <query>...  # job/stage census of one run
   * runMain graft.Harness plans   <sfDir> <query>...  # plan signature (PlanGuardSpec's pins)
-  * runMain graft.Harness explain <sfDir> [query]...  # formatted plans; none = all
+  * runMain graft.Harness explain <sfDir> [query]...  # formatted plans; none = all;
+  *                                                   # <query>:lazy = its full lineage
   * }}}
   *
   * A conf the profile does not set can be given as a `-Dspark.*`
@@ -132,19 +133,6 @@ object Harness {
     flatten(p).groupBy(_.getClass.getSimpleName)
       .view.filterKeys(Kinds.contains).mapValues(_.size).toMap
 
-  /** Full-lineage forms (`<query>:lazy` in `explain`) of operators that
-    * localCheckpoint their shared intermediates: a checkpoint executes
-    * at plan-build time and truncates everything below it to
-    * `Scan ExistingRDD`, so the materialized subtrees are invisible in
-    * the registered query's explain. */
-  private val lazyTwins: Map[String, Query] = Map(
-    "hll_union" -> ((s, d) => graft.operators.Sketch.hllUnion(s, d, materialize = false)),
-    "hll_distinct" -> ((s, d) => graft.operators.Sketch.hllDistinct(s, d, materialize = false)),
-    "lsh_band_eval_dense" -> ((s, d) => graft.operators.AdvCorpus.lshBandEvalDense(s, d, materialize = false)),
-    "adv_lsh_band_dense" -> ((s, d) => graft.operators.AdvCorpus.advLshBandDense(s, d, materialize = false)),
-    "cross_doc_spans" -> ((s, d) => graft.operators.Dedup.crossDocSpans(s, d, materialize = false)),
-    "source_overlap" -> ((s, d) => graft.operators.CorpusAnalytics.sourceOverlap(s, d, materialize = false)))
-
   def main(args: Array[String]): Unit = {
     val usage = "usage: graft.Harness time|probe|plans|explain <sfDir> <query>..."
     require(args.length >= 2 && Set("time", "probe", "plans", "explain")(args(0)), usage)
@@ -172,11 +160,14 @@ object Harness {
           println(s"[plans] $n :: " +
             sig.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(", "))
         }
+      // `<query>:lazy` explains the query's full lineage: built in
+      // Share.lineage, with no checkpoint or lane read cutting it short
       case "explain" =>
         (if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted).foreach { n =>
           println(s"\n========== $n ==========")
-          val q = if (n.endsWith(":lazy")) lazyTwins(n.stripSuffix(":lazy")) else SparkEntry.queries(n)
-          q(spark, dir).explain("formatted")
+          val q = SparkEntry.queries(n.stripSuffix(":lazy"))
+          if (n.endsWith(":lazy")) graft.operators.Share.lineage(q(spark, dir).explain("formatted"))
+          else q(spark, dir).explain("formatted")
         }
     }
     spark.stop()

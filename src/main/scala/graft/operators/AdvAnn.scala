@@ -117,29 +117,25 @@ object AdvAnn {
       .select(col("qid"), col("t.nid").as("nid"))
 
   def advAnnEval(s: SparkSession, d: String): DataFrame = {
-    val e = advEmbeddings(s, d)
+    val e = Share(advEmbeddings(s, d)
       .select(col("vec_id"), col("label"), col("band"), col("v"))
-      .withColumn("nv", norm2(col("v")))
-      .localCheckpoint(true)
-    val q = e.filter(col("vec_id") < NQueries)
+      .withColumn("nv", norm2(col("v"))))
+    val q = Share(e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("band").as("qband"),
-        col("label").as("qlabel"), col("v").as("vq"), col("nv").as("nq"))
-      .localCheckpoint(true)
+        col("label").as("qlabel"), col("v").as("vq"), col("nv").as("nq")))
     val cos = round(cosinePre(col("vq"), col("nq"), col("v"), col("nv")), 6)
 
     // brute-force truth: exact top-3 per query over the full corpus
-    val truth = topk(
+    val truth = Share(topk(
       e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nid"), cos.as("cos")), 3)
-      .localCheckpoint(true)
+        .select(col("qid"), col("vec_id").as("nid"), cos.as("cos")), 3))
 
     // lsh: candidates share the production 4-bit hyperplane bucket
     val eb = e.withColumn("bkt", Ann.bucketCol(col("v")))
     val qb = q.withColumn("bkt", Ann.bucketCol(col("vq")))
-    val lshCand = qb.join(eb, Seq("bkt"))
+    val lshCand = Share(qb.join(eb, Seq("bkt"))
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), cos.as("cos"))
-      .localCheckpoint(true)
+      .select(col("qid"), col("vec_id").as("nid"), cos.as("cos")))
 
     // ivf_label: cells = the metadata label column; centroids from
     // exact integer milli sums; 1-probe the nearest cell by cosine
@@ -152,7 +148,10 @@ object AdvAnn {
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("sm"), col("n")))),
         t => t.getField("sm").cast("double") / t.getField("n") / 1000.0).as("c"))
       .withColumn("nc", norm2(col("c")))
-    val probe = q.crossJoin(broadcast(cent))
+    // the broadcast side is the pinned 40-row query set, bounded by
+    // its literal filter; the centroid table is bounded only by the
+    // label count, which the plan cannot show
+    val probe = broadcast(q).crossJoin(cent)
       .select(col("qid"), col("label"),
         round(cosinePre(col("vq"), col("nq"), col("c"), col("nc")), 6).as("ccos"))
       .withColumn("rn", row_number().over(
@@ -160,12 +159,11 @@ object AdvAnn {
           .orderBy(col("ccos").desc, col("label"))))
       .filter(col("rn") === 1)
       .select(col("qid"), col("label"))
-    val ivfCand = probe
+    val ivfCand = Share(probe
       .join(q.select(col("qid"), col("vq"), col("nq")), "qid")
       .join(e.select(col("label"), col("vec_id"), col("v"), col("nv")), "label")
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), cos.as("cos"))
-      .localCheckpoint(true)
+      .select(col("qid"), col("vec_id").as("nid"), cos.as("cos")))
 
     // per-(method, band) rollup as ONE tagged-union DAG (r14, guide
     // §1.4/§5 — the advHybridRrf rationale): the per-method form ran
@@ -242,11 +240,10 @@ object AdvAnn {
     val isQuote = col("doc_id") % 16 === 5 && col("doc_id") >= 16 &&
       col("doc_id") < 320
     // lexical lane: distinct-token postings, rare-term integer idf
-    val postings = docs
+    val postings = Share(docs
       .select(col("doc_id"),
         explode(array_distinct(tokens(col("text")))).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .localCheckpoint(true)
+      .filter(length(col("tok")) > 0))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val dfreq = postings.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val qterms = postings.filter(isQuote)
@@ -255,7 +252,7 @@ object AdvAnn {
       .crossJoin(broadcast(nDocs))
       .select(col("qid"), col("tok"),
         expr("(n_docs * 1000) div df").as("w"))
-    val lexRanked = qterms
+    val lexRanked = Share(qterms
       .join(postings.select(col("doc_id").as("nid"), col("tok")), "tok")
       .filter(col("nid") =!= col("qid"))
       .groupBy(col("qid"), col("nid"))
@@ -266,19 +263,16 @@ object AdvAnn {
         reverse = true).as("top"))
       .select(col("qid"), posexplode(array_sort(col("top"))).as(Seq("i", "t")))
       .select(col("qid"), col("t.nid").as("nid"),
-        (col("i") + 1).cast("long").as("lex_rank"))
-      .localCheckpoint(true)
+        (col("i") + 1).cast("long").as("lex_rank")))
     // semantic lane: cosine top-10 over the clustered embeddings
-    val e = advEmbeddings(s, d)
-      .select(col("vec_id"), col("v")).withColumn("nv", norm2(col("v")))
-      .localCheckpoint(true)
+    val e = Share(advEmbeddings(s, d)
+      .select(col("vec_id"), col("v")).withColumn("nv", norm2(col("v"))))
     val qv = e.filter(col("vec_id") % 16 === 5 && col("vec_id") >= 16 &&
         col("vec_id") < 320)
       .select(col("vec_id").as("qid"), col("v").as("vq"), col("nv").as("nq"))
     val cos = round(cosinePre(col("vq"), col("nq"), col("v"), col("nv")), 6)
-    val semScored = e.join(broadcast(qv), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), cos.as("cos"))
-      .localCheckpoint(true)
+    val semScored = Share(e.join(broadcast(qv), col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nid"), cos.as("cos")))
     def semTop(k: Int, rankName: String): DataFrame = semScored
       .groupBy(col("qid"))
       .agg(graft.functions.TopKAgg.collectTopK(
@@ -287,7 +281,7 @@ object AdvAnn {
       .select(col("qid"), posexplode(array_sort(col("top"))).as(Seq("i", "t")))
       .select(col("qid"), col("t.nid").as("nid"),
         (col("i") + 1).cast("long").as(rankName))
-    val semRanked = semTop(K, "sem_rank").localCheckpoint(true)
+    val semRanked = Share(semTop(K, "sem_rank"))
     // rrf fusion over the two lane top-10s
     val rrfScore =
       coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
@@ -300,15 +294,13 @@ object AdvAnn {
       .filter(col("rrf_rank") <= K)
       .select(col("qid"), col("nid"))
     // truth channels
-    val parentTruth = docs.filter(isQuote && col("lang") =!= "zh")
+    val parentTruth = Share(docs.filter(isQuote && col("lang") =!= "zh")
       .select(col("doc_id").as("qid"), col("lang").as("qlang"),
         (col("doc_id") - 5).as("nid"))
       .join(docs.select(col("doc_id").as("nid"), col("lang").as("plang")), "nid")
       .filter(col("qlang") === col("plang"))
-      .select(col("qid"), col("nid"))
-      .localCheckpoint(true)
-    val knnTruth = semTop(3, "rn").select(col("qid"), col("nid"))
-      .localCheckpoint(true)
+      .select(col("qid"), col("nid")))
+    val knnTruth = Share(semTop(3, "rn").select(col("qid"), col("nid")))
     // rollup: lanes x channels as ONE tagged-union DAG (r14, guide
     // §1.4/§5 — count the jobs): the per-(lane, channel) form ran 6
     // branches x (truth count + broadcast hits count) ≈ a dozen tiny

@@ -260,7 +260,7 @@ object AdvCorpus {
     * corpus (a brute-force oracle would be 2.5G pairs there).
     */
   def advContainmentPpjoin(s: SparkSession, d: String): DataFrame = {
-    val base = advDocuments(s, d)
+    val base = Share(advDocuments(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         array_sort(array_distinct(graft.functions.TextFunctions
@@ -272,8 +272,7 @@ object AdvCorpus {
       // cont=1.0 — 2775 junk pairs at sf0.01); the standard dedup
       // practice is a minimum-content gate, applied identically in
       // the oracle
-      .filter(col("nu") >= 5)
-      .localCheckpoint(true)
+      .filter(col("nu") >= 5))
     val postings = base.select(col("doc_id"), col("nu"),
       explode(col("uni")).as("tok"))
     val dfreq = postings.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -351,9 +350,8 @@ object AdvCorpus {
     * only widens the verified-superset, never the output (same note as
     * adv_containment_ppjoin).
     */
-  def advLshBandDense(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame =
-    bandEvalDense(advDocuments(s, d), materialize)
+  def advLshBandDense(s: SparkSession, d: String): DataFrame =
+    bandEvalDense(advDocuments(s, d))
 
   /** The dense plan over the DRIVER documents table — the corpus that
     * is actually dense (31-token vocab => share-a-shingle |U| is 9% of
@@ -362,22 +360,17 @@ object AdvCorpus {
     * must EQUAL lsh_band_eval's exactly — two independent plans (pair
     * universe vs prefix-truth + band-join), one matrix — so the two
     * queries cross-pin each other through the strict oracle gate. */
-  def lshBandEvalDense(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame =
-    bandEvalDense(Tables.documents(s, d).select(col("doc_id"), col("text")),
-      materialize)
+  def lshBandEvalDense(s: SparkSession, d: String): DataFrame =
+    bandEvalDense(Tables.documents(s, d).select(col("doc_id"), col("text")))
 
-  private def bandEvalDense(docs: DataFrame,
-      materialize: Boolean = true): DataFrame = {
+  private def bandEvalDense(docs: DataFrame): DataFrame = {
     import graft.functions.TextFunctions.gramHashes
-    def ckpt(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
     val P = Dedup.P
     // shs materialized + checkpointed BEFORE the 8 sig transforms:
     // CollapseProject would otherwise re-inline the md5 shingle chain
     // into every signature expression (the minhashSigDf lesson —
     // measured 25x there)
-    val shsDf = ckpt(docs
+    val shsDf = Share(docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), array_sort(array_distinct(
         transform(gramHashes(col("toks"), 3), h => h % P))).as("shs"))
@@ -387,7 +380,7 @@ object AdvCorpus {
       val b = 101 * j + 7
       array_min(transform(col("shs"), h => (h * a + b) % P))
     }: _*)
-    val base = ckpt(shsDf
+    val base = Share(shsDf
       .select(col("doc_id"), col("shs"),
         size(col("shs")).cast("long").as("ns"), sigArr.as("sig_arr")))
     val scal = base.agg(count(lit(1)).as("n"))

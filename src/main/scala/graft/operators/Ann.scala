@@ -339,15 +339,11 @@ object Ann {
     * ground truth and both candidate sets are the REGISTERED
     * operators' outputs, read from their lanes (see above), so this
     * evaluates exactly what ships. Cost: the eval joins are on the
-    * tiny (nq x k) result sets. materialize = false recomputes every
-    * component inline instead of reading lanes — the lazy twin
-    * PlanGuardSpec lints and AnnLaneSpec proves equivalent.
+    * tiny (nq x k) result sets. In [[Share.lineage]] mode every lane
+    * read is its live derivation instead (EvalOpsSpec pins both equal).
     */
-  def annEval(s: SparkSession, d: String, materialize: Boolean = true): DataFrame = {
-    def of(lane: (SparkSession, String) => DataFrame,
-        live: (SparkSession, String) => DataFrame): DataFrame =
-      if (materialize) lane(s, d) else live(s, d)
-    val truth = of(bruteforceTopkCached, annBruteforceTopk _)
+  def annEval(s: SparkSession, d: String): DataFrame = {
+    val truth = bruteforceTopkCached(s, d)
       .filter(col("rn") <= 3).select(col("qid"), col("nid"))
     val truthAgg = truth.agg(count(lit(1)).as("n_truth"))
     def scoreOf(name: String, retrieved: DataFrame): DataFrame = {
@@ -364,9 +360,9 @@ object Ann {
             floor(col("n_hits") * lit(1000000L) / col("n_truth")))
             .otherwise(lit(null).cast("long")).as("recall_ppm"))
     }
-    scoreOf("lsh", of(lshTopkCached, annLshTopk _))
-      .unionAll(scoreOf("ivf", of(ivfTopkCached, annIvfTopk _)))
-      .unionAll(scoreOf("pq_adc", of(pqAdcTopkCached, annPqAdcTopk _)))
+    scoreOf("lsh", lshTopkCached(s, d))
+      .unionAll(scoreOf("ivf", ivfTopkCached(s, d)))
+      .unionAll(scoreOf("pq_adc", pqAdcTopkCached(s, d)))
   }
 
   val queries: Map[String, Relational.Q] = Map(
@@ -374,7 +370,7 @@ object Ann {
     "ann_bruteforce_topk" -> (annBruteforceTopk _),
     "ann_lsh_topk" -> (annLshTopk _),
     "ann_ivf_topk" -> (annIvfTopk _),
-    "ann_eval" -> ((s, d) => annEval(s, d)),
+    "ann_eval" -> (annEval _),
     "embedding_kmeans_step" -> (embeddingKmeansStep _)
   )
 

@@ -991,7 +991,7 @@ object Cdc {
     // materialized ONCE (the star join + agg is the expensive stage);
     // every per-year slice write below re-reads the ~175-row panel,
     // never re-executes the join
-    val panel = li
+    val panel = Share(li
       .join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -999,8 +999,7 @@ object Cdc {
         year(col("o_orderdate")).cast("long").as("yr"))
       .agg(graft.functions.ExactSum.sumExact(
         col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      .withColumn("pk", concat(col("nation"), lit("#"), col("yr")))
-      .localCheckpoint(true)
+      .withColumn("pk", concat(col("nation"), lit("#"), col("yr"))))
     val years = panel.select(col("yr")).distinct()
       .collect().map(_.getLong(0)).sorted // bounded: TPC-H spans 7 years
     if (years.isEmpty)
@@ -1044,7 +1043,7 @@ object Cdc {
     // (~|nations| x |years| rows); materializing it runs the diff once
     // without hiding any lifecycle step (the feed is still computed
     // live from the two pinned snapshots inside the timed query).
-    val changed = feed.filter(col("op") =!= "unchanged").localCheckpoint(true)
+    val changed = Share(feed.filter(col("op") =!= "unchanged"))
     val touched = changed.select(col("yr")).distinct()
       .collect().map(_.getLong(0)) // bounded by the year count
     val carried = pre.read(s, "stats")
@@ -1519,9 +1518,9 @@ object Cdc {
     val best = Dedup.neardupBest(b1, published)
     val dropped = b1.join(best.filter(col("best_est") >= 0.5)
       .select(col("doc_id")), Seq("doc_id"))
-    val survivors = b1.join(best.filter(col("best_est").isNull ||
-        col("best_est") < 0.5).select(col("doc_id")), Seq("doc_id"))
-      .localCheckpoint(true) // lands twice below (ledger no-op proof)
+    // lands twice below (ledger no-op proof)
+    val survivors = Share(b1.join(best.filter(col("best_est").isNull ||
+        col("best_est") < 0.5).select(col("doc_id")), Seq("doc_id")))
     cat.appendIfNew("crawler", 1L, Map("docs" -> survivors)) // m3
     // the re-delivered micro-batch must be a no-op
     val again = cat.appendIfNew("crawler", 1L, Map("docs" -> survivors))
@@ -1595,9 +1594,9 @@ object Cdc {
     // dedup screen: one survivor (min crawl id) per text NOT yet in
     // the published corpus; checkpointed — reused by append + censuses
     def screen(batch: DataFrame, published: DataFrame): DataFrame =
-      batch.join(published.select(col("text")), Seq("text"), "left_anti")
+      Share(batch.join(published.select(col("text")), Seq("text"), "left_anti")
         .groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
+        .select(col("doc_id"), col("text")))
     def census(stage: Long, channel: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_docs"),
         coalesce(sum(length(col("text"))), lit(0L)).as("n_chars"))

@@ -99,9 +99,8 @@ object Corpus {
     // NOT cache(): nothing outlives the query in the cacheManager, so
     // a re-run pays full cost (honest bench) and a long session never
     // accumulates stale InMemoryRelations.
-    val tf = base.groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = Share(base.groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf")))
     val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("df_t"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val idf = log((col("n_docs") + 1).cast("double") / (col("df_t") + 1)) + 1.0
@@ -140,13 +139,12 @@ object Corpus {
     // global-stats aggregate and the final scoring pass — otherwise
     // each branch re-tokenizes the raw corpus (self-join recompute).
     // Eager localCheckpoint, not cache(): see tfidfTopterms.
-    val per = Tables.documents(s, d)
+    val per = Share(Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(
         Seq(col("doc_id"), size(col("toks")).cast("long").as("dl")) ++
           bm25Terms.map(t =>
-            size(filter(col("toks"), x => x === lit(t))).cast("long").as(s"tf_$t")): _*)
-      .localCheckpoint(true)
+            size(filter(col("toks"), x => x === lit(t))).cast("long").as(s"tf_$t")): _*))
     val aggCols = Seq(sum(col("dl")).as("sum_dl"), count(lit(1)).as("n_docs")) ++
       bm25Terms.map(t =>
         sum((col(s"tf_$t") > 0).cast("long")).as(s"df_$t"))
@@ -329,12 +327,10 @@ object Corpus {
     // (the scalar totals AND the scoring joins) — materialize once so
     // the corpus-wide explodes never replay (eager localCheckpoint,
     // not cache(): see tfidfTopterms)
-    val cxy = pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint(true)
-    val uni = Tables.documents(s, d)
+    val cxy = Share(pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy")))
+    val uni = Share(Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("t")).agg(count(lit(1)).as("c")))
     val tot = uni.agg(sum(col("c")).as("nt")).crossJoin(
       cxy.agg(sum(col("c_xy")).as("np")))
     val pmi = log(col("c_xy").cast("double") * col("nt") * col("nt") /

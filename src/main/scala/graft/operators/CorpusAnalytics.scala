@@ -33,11 +33,8 @@ object CorpusAnalytics {
     * distinct-gram sizes. Output is #source-pairs rows (pairs sharing
     * >= 1 gram).
     */
-  def sourceOverlap(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    val hs = ckpt(Tables.documents(s, d)
+  def sourceOverlap(s: SparkSession, d: String): DataFrame = {
+    val hs = Share(Tables.documents(s, d)
       .select(col("source"), tokens(col("text")).as("toks"))
       .select(col("source"), explode(gramHashes(col("toks"), 3)).as("h"))
       .groupBy(col("h")).agg(collect_set(col("source")).as("ss")))
@@ -48,21 +45,20 @@ object CorpusAnalytics {
     // shape recomputed the single-explode sizes subtree under BOTH
     // broadcast sides (3 checkpoint scans / Generates / exchanges;
     // plans/r14/source_overlap_before.txt nodes 10-17 and 20-27).
-    // The pair aggregate is localCheckpointed (bounded: <= #sources
+    // The pair aggregate is shared (bounded: <= #sources
     // choose 2 + #sources rows) because its three consumers' filters
     // would otherwise be PUSHED BELOW the exchange, splitting it into
     // three non-identical subtrees that AQE cannot reuse — measured in
     // the plan before the checkpoint was added: the a=b / a<b
     // predicates landed under each branch's partial aggregate.
-    val pairs = hs.select(col("ss"), explode(col("ss")).as("source_a"))
+    val pairs = Share(hs.select(col("ss"), explode(col("ss")).as("source_a"))
       .select(col("source_a"), explode(col("ss")).as("source_b"))
       .filter(col("source_a") <= col("source_b"))
       .groupBy(col("source_a"), col("source_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    val pairsCk = ckpt(pairs)
-    val sizes = pairsCk.filter(col("source_a") === col("source_b"))
+      .agg(count(lit(1)).as("n_shared")))
+    val sizes = pairs.filter(col("source_a") === col("source_b"))
       .select(col("source_a").as("source"), col("n_shared").as("n"))
-    val inter = pairsCk.filter(col("source_a") =!= col("source_b"))
+    val inter = pairs.filter(col("source_a") =!= col("source_b"))
     inter
       .join(broadcast(sizes.select(col("source").as("source_a"), col("n").as("n_a"))),
         Seq("source_a"))
@@ -149,12 +145,11 @@ object CorpusAnalytics {
     * k-BOUNDED heap aggregate (TopKAgg, never a global sort) and joins
     * back as a broadcast. Nothing corpus-sized moves twice.
     */
-  def vocabCoverage(s: SparkSession, d: String, materialize: Boolean = true): DataFrame = {
-    val st0 = Tables.documents(s, d)
+  def vocabCoverage(s: SparkSession, d: String): DataFrame = {
+    // one corpus pass; vocab + coverage both reuse it
+    val st = Share(Tables.documents(s, d)
       .select(col("source"), explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n"))
-    // one corpus pass; vocab + coverage both reuse it (lazy for plan lint)
-    val st = if (materialize) st0.localCheckpoint(true) else st0
+      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n")))
     val vocab = st.groupBy(col("tok")).agg(sum(col("n")).as("cnt"))
       .agg(graft.functions.TopKAgg.collectTopK(
         struct((lit(0L) - col("cnt")).as("neg"), col("tok")), 1000,
@@ -192,12 +187,11 @@ object CorpusAnalytics {
     * the top-k terms + an OOV bucket per source (vocab_coverage's
     * discipline) before pairing; the plan shape is unchanged.
     */
-  def sourceDivergence(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
-    val tfLazy = Tables.documents(s, d)
+  def sourceDivergence(s: SparkSession, d: String): DataFrame = {
+    // sources x vocab — reused four times below
+    val tf = Share(Tables.documents(s, d)
       .select(col("source"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
-    val tf = if (materialize) tfLazy.localCheckpoint(true) else tfLazy // sources x vocab — reused four times below
+      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))
     // k-bounded caps make the pairwise expansion PROVABLY bounded:
     // top-256 sources by token mass and top-4096 terms by corpus
     // count — no-ops on this corpus (20/200 sources, ~31/310 terms),

@@ -98,8 +98,8 @@ object Dedup {
     val arr = array((0 until 8).map(j => col(s"sig$j")): _*)
     // each side feeds a band join AND a signature attach: materialize
     // once (the 100 TB version writes the signature table between jobs)
-    val sigN = minhashSigOf(newDocs).withColumn("sig_arr", arr).localCheckpoint(true)
-    val sigB = minhashSigOf(base).withColumn("sig_arr", arr).localCheckpoint(true)
+    val sigN = Share(minhashSigOf(newDocs).withColumn("sig_arr", arr))
+    val sigB = Share(minhashSigOf(base).withColumn("sig_arr", arr))
     val cand = bandsOf(sigN).select(col("doc_id").as("new_id"), col("bid"), col("bh"))
       .join(bandsOf(sigB).select(col("doc_id").as("old_id"), col("bid"), col("bh")),
         Seq("bid", "bh"))
@@ -197,9 +197,8 @@ object Dedup {
     // cache(): nothing outlives the query in the cacheManager (honest
     // re-run timings, no session-long accumulation). The 100 TB version
     // of this is writing the signature table to parquet between stages.
-    val sig = minhashSigDf(s, d)
-      .withColumn("sig_arr", array((0 until 8).map(j => col(s"sig$j")): _*))
-      .localCheckpoint(true)
+    val sig = Share(minhashSigDf(s, d)
+      .withColumn("sig_arr", array((0 until 8).map(j => col(s"sig$j")): _*)))
 
     // slim candidate generation: only (doc_id, band) through the join
     val bands = bandsOf(sig)
@@ -245,9 +244,9 @@ object Dedup {
     * keep_flag = 1 with null match columns.
     */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val sig = minhashSigDf(s, d)
-      .withColumn("sig_arr", array((0 until 8).map(j => col(s"sig$j")): _*))
-      .localCheckpoint(true) // two band sides + two attach joins
+    // two band sides + two attach joins
+    val sig = Share(minhashSigDf(s, d)
+      .withColumn("sig_arr", array((0 until 8).map(j => col(s"sig$j")): _*)))
     val bands = bandsOf(sig)
     val cand = bands.filter(pmod(col("doc_id"), lit(10)) === 9)
       .select(col("doc_id").as("new_id"), col("bid"), col("bh"))
@@ -326,9 +325,8 @@ object Dedup {
     // measured as a x0.6 regression before this line. The fingerprint
     // table is narrow (doc_id, simhash), so this exchange is a fraction
     // of the (doc_id) exchange the pre-kernel groupBy form paid anyway.
-    val fp = dedupSimhash(s, d).select(col("doc_id"), col("simhash"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .localCheckpoint(true)
+    val fp = Share(dedupSimhash(s, d).select(col("doc_id"), col("simhash"))
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
     val bandArr = array((0 until 4).map { b =>
       shiftright(col("simhash"), 15 * b).bitwiseAND(lit(0x7FFFL))
     }: _*)
@@ -358,8 +356,12 @@ object Dedup {
     * change flag rides along in the same pass, so detecting the
     * fixpoint is a sub-millisecond sum over the freshly checkpointed
     * (in-memory) label table — not a second join replaying the
-    * iteration. localCheckpoint truncates lineage so iteration N never
-    * replays 1..N-1.
+    * iteration. Each label table is checkpointed, which truncates
+    * lineage so iteration N never replays 1..N-1. The pair set and
+    * every label table go through [[Share.loopState]], eager in lineage
+    * mode too: the trip count depends on the data, so a lazy form would
+    * grow the plan by one join round per iteration, and every
+    * iteration would recompute the pair set.
     *
     * Correctness: labels only decrease, every label is a node id from
     * the same component (induction: neighbor labels and
@@ -368,44 +370,10 @@ object Dedup {
     * converges to exactly its min node id, matching the recursive-CTE
     * oracle. A non-converged exit is a hard error, not a silent
     * wrong answer.
-    *
-    * `checkpointDir` selects the 100 TB materialization mode: per-
-    * iteration label tables go to parquet (bounded executor memory,
-    * survives executor loss) instead of in-memory localCheckpoint —
-    * result-identical, pinned in DedupPipelineSpec.
     */
-  private[operators] def connectedComponents(
-      pairsIn: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // Materialization strategy per iteration: in-memory localCheckpoint
-    // by default (right for the bench corpora — no disk round-trip),
-    // parquet under `checkpointDir` when set — the 100 TB mode, where a
-    // corpus-sized label table must not live in executor memory and a
-    // lost executor must not replay the whole iteration history.
-    // Parquet also fully truncates lineage (a LogicalRDD from
-    // localCheckpoint still pins the blocks of every live reference).
-    var gen = 0
-    def materialize(df: DataFrame, name: String): DataFrame =
-      checkpointDir match {
-        case None => df.localCheckpoint(true)
-        case Some(dir) =>
-          val path = s"$dir/$name-$gen"
-          gen += 1
-          df.write.mode("overwrite").parquet(path)
-          // once generation N is on disk, generation N-1 is dead
-          // (lineage is cut at each write) — delete it so a long run
-          // holds at most 2 corpus-sized label tables, not one per
-          // iteration
-          if (name == "labels" && gen >= 2) {
-            val stale = new org.apache.hadoop.fs.Path(s"$dir/$name-${gen - 2}")
-            val fs = stale.getFileSystem(
-              df.sparkSession.sessionState.newHadoopConf())
-            if (fs.exists(stale)) fs.delete(stale, true)
-          }
-          graft.ParquetSchemas.read(df.sparkSession, path)
-      }
+  private[operators] def connectedComponents(pairsIn: DataFrame): DataFrame = {
     // one up-front job materializes the (typically expensive) pair set
-    val pairs = materialize(pairsIn, "pairs")
+    val pairs = Share.loopState(pairsIn)
     val edges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .withColumnsRenamed(Map("doc_a" -> "src", "doc_b" -> "dst"))
@@ -413,11 +381,10 @@ object Dedup {
     // groupBy costs the same shuffle the distinct() would, and it IS
     // iteration 1's output (identity seeds make the first neighbor-min
     // pass a no-op shortcut) — one fewer full join+agg round trip.
-    var labels = materialize(
+    var labels = Share.loopState(
       edges.groupBy(col("src"))
         .agg(min(col("dst")).as("mn"))
-        .select(col("src").as("doc"), least(col("src"), col("mn")).as("lbl")),
-      "labels")
+        .select(col("src").as("doc"), least(col("src"), col("mn")).as("lbl")))
     var changed = 1L
     var iter = 0
     val maxIter = 25
@@ -431,12 +398,11 @@ object Dedup {
           least(col("lbl"), coalesce(col("min_nbr"), col("lbl"))).as("l1"))
       // shortcut through the previous (checkpointed) labels: no
       // recompute of `prop`, still a valid in-component upper bound
-      val next = materialize(prop
+      val next = Share.loopState(prop
         .join(labels.select(col("lbl").as("l2"), col("doc").as("l1")), Seq("l1"), "left")
         .select(col("doc"),
           least(col("l1"), coalesce(col("l2"), col("l1"))).as("lbl"),
-          (least(col("l1"), coalesce(col("l2"), col("l1"))) =!= col("old")).as("chg")),
-        "labels")
+          (least(col("l1"), coalesce(col("l2"), col("l1"))) =!= col("old")).as("chg")))
       changed = next.agg(coalesce(sum(col("chg").cast("long")), lit(0L)))
         .first().getLong(0)
       labels = next.select(col("doc"), col("lbl"))
@@ -535,14 +501,13 @@ object Dedup {
     * primitive longs; counts identical (md5 injective on the distinct
     * sets). */
   private def ngramBase(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+    Share(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"),
         array_sort(array_distinct(gramHashes(col("toks"), 1))).as("uni"),
         array_sort(array_distinct(gramHashes(col("toks"), 3))).as("tri"))
       .select(col("doc_id"), col("source"), col("uni"), col("tri"),
-        size(col("uni")).as("nu"), size(col("tri")).as("nt"))
-      .localCheckpoint(true)
+        size(col("uni")).as("nu"), size(col("tri")).as("nt")))
 
   def dedupNgramJaccard(s: SparkSession, d: String): DataFrame = {
     val base = ngramBase(s, d)
@@ -731,7 +696,7 @@ object Dedup {
       .filter(pmod(col("doc_id"), lit(5)) === 0 && col("sig0").isNotNull)
       .select(col("doc_id"),
         array((0 until 8).map(j => col(s"sig$j")): _*).as("sig_arr"))
-    val base = docs.join(sig, Seq("doc_id")).localCheckpoint(true)
+    val base = Share(docs.join(sig, Seq("doc_id")))
     val a = base.select(col("source"), col("doc_id").as("doc_a"),
       col("uni").as("ua"), col("nu").as("na"), col("sig_arr").as("sa"))
     val b = base.select(col("source"), col("doc_id").as("doc_b"),
@@ -797,7 +762,7 @@ object Dedup {
       .filter(col("sig0").isNotNull)
       .select(col("doc_id"),
         array((0 until 8).map(j => col(s"sig$j")): _*).as("sig_arr"))
-    val base = docs.join(sig, Seq("doc_id")).localCheckpoint(true)
+    val base = Share(docs.join(sig, Seq("doc_id")))
     val scal = base.agg(count(lit(1)).as("n"))
       .select(expr("n * (n - 1) div 2").as("total_pairs"))
     val edges = base.select(col("doc_id"), explode(col("shs")).as("g"))
@@ -872,7 +837,7 @@ object Dedup {
       .filter(pmod(col("doc_id"), lit(5)) === 0 && col("sig0").isNotNull)
       .select(col("doc_id"),
         array((0 until 8).map(j => col(s"sig$j")): _*).as("sig_arr"))
-    val base = docs.join(sig, Seq("doc_id")).localCheckpoint(true)
+    val base = Share(docs.join(sig, Seq("doc_id")))
     val a = base.select(col("source"), col("doc_id").as("doc_a"),
       col("uni").as("ua"), col("nu").as("na"), col("sig_arr").as("sa"))
     val m = aggregate(zip_with(col("sa"), col("sb"),
@@ -925,13 +890,12 @@ object Dedup {
   private[graft] val IncrRem = 3
 
   def containmentIncremental(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.documents(s, d)
+    val base = Share(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"),
         array_sort(array_distinct(gramHashes(col("toks"), 1))).as("uni"))
       .select(col("doc_id"), col("source"), col("uni"),
-        size(col("uni")).cast("long").as("nu"))
-      .localCheckpoint(true)
+        size(col("uni")).cast("long").as("nu")))
     val batch = base.filter(pmod(col("doc_id"), lit(IncrMod)) === IncrRem)
       .select(col("source"), col("doc_id").as("new_id"),
         col("uni").as("un"), col("nu").as("nn"))
@@ -1082,13 +1046,12 @@ object Dedup {
     * dedup_pipeline discipline.
     */
   def dedupContainment(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.documents(s, d)
+    val base = Share(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"),
         array_sort(array_distinct(gramHashes(col("toks"), 1))).as("uni"))
       .select(col("doc_id"), col("source"), col("uni"),
-        size(col("uni")).cast("long").as("nu"))
-      .localCheckpoint(true)
+        size(col("uni")).cast("long").as("nu")))
     val a = base.select(col("source"), col("doc_id").as("doc_a"),
       col("uni").as("uni_a"), col("nu").as("nu_a"))
     val b = base.select(col("source"), col("doc_id").as("doc_b"),
@@ -1131,15 +1094,14 @@ object Dedup {
     * partitions on (doc_a, doc_b, diag) — high cardinality, no skew.
     * At 100 TB the df band is the knob; the plan shape is fixed.
     */
-  def crossDocSpans(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def crossDocSpans(s: SparkSession, d: String): DataFrame = {
     val K = 8
     val toksDf = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val gramsLazy = toksDf
+    // shared by the df-prune AND both join sides
+    val grams = Share(toksDf
       .select(col("doc_id"), posexplode(gramHashes(col("toks"), K)))
-      .toDF("doc_id", "pos", "h")
-    val grams = if (materialize) gramsLazy.localCheckpoint(true) else gramsLazy // shared by the df-prune AND both join sides
+      .toDF("doc_id", "pos", "h"))
     val keep = grams.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("cd"))
       .filter(col("cd").between(2, 50)).select(col("h"))
@@ -1178,13 +1140,11 @@ object Dedup {
     * blocking key widens (e.g. + simhash band) before block size
     * grows — the LSH operators here compose as a pre-filter.
     */
-  def fuzzyMatchCensus(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
-    val baseLazy = Tables.documents(s, d)
+  def fuzzyMatchCensus(s: SparkSession, d: String): DataFrame = {
+    val base = Share(Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         substring(normText(col("text")), 1, 48).as("pfx"),
-        (col("n_chars") / 16).cast("long").as("lb"))
-    val base = if (materialize) baseLazy.localCheckpoint(true) else baseLazy
+        (col("n_chars") / 16).cast("long").as("lb")))
     val a = base.select(col("source"), col("lb"),
       col("doc_id").as("doc_a"), col("pfx").as("pfx_a"))
     val b = base.select(col("source"), col("lb"),
@@ -1229,11 +1189,10 @@ object Dedup {
     * the within-block quadratic bounded at any corpus size.
     */
   def fuzzyMatchBlocked(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.documents(s, d)
+    val base = Share(Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         substring(normText(col("text")), 1, 48).as("pfx"),
-        (col("n_chars") / 16).cast("long").as("lb"))
-      .localCheckpoint(true)
+        (col("n_chars") / 16).cast("long").as("lb")))
     val grams = base
       .select(col("doc_id"), charShingles(col("pfx"), 4).as("chs"))
       .select(col("doc_id"), explode(col("chs")).as("g"))
@@ -1293,7 +1252,7 @@ object Dedup {
     * arrivals; the generator's duplicate pairs preserve mod 10, so a
     * mod-10 split would never cross the batch boundary).
     *
-    * Plan: ONE tokenize pass shared by both sides (localCheckpoint);
+    * Plan: ONE tokenize pass shared by both sides ([[Share]]);
     * the corpus side collapses to a DISTINCT gram-hash set; the batch
     * side keeps positions; membership is an equi-join (semi by
     * construction — the right side is distinct), then covered token
@@ -1303,14 +1262,13 @@ object Dedup {
     * (uniform, no skew) and composes with bloom_prune_join's sketch
     * screen to skip the shuffle for miss-dominated batches.
     */
-  def spanCoverageIncremental(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def spanCoverageIncremental(s: SparkSession, d: String): DataFrame = {
     val K = 8
-    val baseLazy = Tables.documents(s, d)
+    // shared: corpus set, batch grams, batch totals
+    val base = Share(Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
-        gramHashes(col("toks"), K).as("gh"))
-    val base = if (materialize) baseLazy.localCheckpoint(true) else baseLazy // shared: corpus set, batch grams, batch totals
+        gramHashes(col("toks"), K).as("gh")))
     val corpus = base.filter(pmod(col("doc_id"), lit(IncrMod)) =!= IncrRem)
       .select(explode(col("gh")).as("h")).distinct()
     // NOT the dup_span_rewrite interval kernel: an r14 paired A/B at
@@ -1356,12 +1314,10 @@ object Dedup {
     * doc_id or the gram hash — nothing pairwise, and the token
     * strings never enter a shuffle.
     */
-  def dupSpanRewrite(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def dupSpanRewrite(s: SparkSession, d: String): DataFrame = {
     val K = 8
-    val toksLazy = Tables.documents(s, d)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val toksDf = if (materialize) toksLazy.localCheckpoint(true) else toksLazy
+    val toksDf = Share(Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("toks")))
     val grams = toksDf
       .select(col("doc_id"), posexplode(gramHashes(col("toks"), K)))
       .toDF("doc_id", "pos", "h")
@@ -1643,7 +1599,7 @@ object Dedup {
       .select(col("doc_id"), col("source"),
         array_sort(array_distinct(gramHashes(col("toks"), 3))).as("tri"))
       .select(col("doc_id"), col("source"), col("tri"), size(col("tri")).as("nt"))
-    val base = docs.join(fps, Seq("doc_id")).localCheckpoint(true)
+    val base = Share(docs.join(fps, Seq("doc_id")))
     val a = base.select(col("source"), col("doc_id").as("doc_a"),
       col("tri").as("ta"), col("nt").as("na"), col("simhash").as("fa"))
     val b = base.select(col("source"), col("doc_id").as("doc_b"),

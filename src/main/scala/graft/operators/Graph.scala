@@ -20,7 +20,7 @@ import graft.Tables
   *   pr_t+1(v) = 0.15 + 0.85 * sum over neighbors u of pr_t(u)/deg(u)
   *
   * Scale shape: the (src, dst, deg) edge table is materialized ONCE
-  * (eager localCheckpoint — it feeds every iteration) and each
+  * ([[Share]] — it feeds every iteration) and each
   * iteration is one keyed join edges-to-ranks plus one groupBy(dst)
   * aggregation — the same "one shuffle per superstep" discipline as
   * connectedComponents, with corpus-sized sides always on keyed
@@ -43,22 +43,18 @@ object Graph {
   /** The iteration core over an explicit node set (`docs`: doc_id) and
     * undirected pair set (`pairs`: doc_a, doc_b) — unit-testable against
     * hand-computed ranks (GraphSpec). Both multiply-consumed inputs
-    * materialize once when `materialize` (the (src, dst, deg) edge
-    * table feeds every superstep; the doc_id node set feeds every
-    * left join — without the checkpoint each iteration would re-scan
-    * documents and re-derive all earlier ranks through lineage);
-    * `materialize = false` keeps the whole composition lazy for the
-    * PlanGuardSpec join-shape lint.
+    * are shared (the (src, dst, deg) edge table feeds every superstep;
+    * the doc_id node set feeds every left join — without the
+    * checkpoint each iteration would re-scan documents and re-derive
+    * all earlier ranks through lineage).
     */
-  private[operators] def pagerank(docs: DataFrame, pairs: DataFrame, iters: Int,
-      materialize: Boolean = true): DataFrame = {
+  private[operators] def pagerank(docs: DataFrame, pairs: DataFrame, iters: Int): DataFrame = {
     val und = pairs.select(col("doc_a"), col("doc_b"))
     val edges = und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(und.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    def mat(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint(true) else df
-    val ed = mat(edges.join(deg, Seq("src")))
-    val ids = mat(docs.select(col("doc_id")))
+    val ed = Share(edges.join(deg, Seq("src")))
+    val ids = Share(docs.select(col("doc_id")))
 
     var r = ids.withColumn("prm", lit(1000000L))
     for (_ <- 1 to iters) {
@@ -76,9 +72,8 @@ object Graph {
     r.select(col("doc_id"), (col("prm") / lit(1000000.0)).as("pr"))
   }
 
-  def similarityPagerank(s: SparkSession, d: String, iters: Int = 3,
-      materialize: Boolean = true): DataFrame =
-    pagerank(Tables.documents(s, d), Dedup.lshPairsCached(s, d), iters, materialize)
+  def similarityPagerank(s: SparkSession, d: String, iters: Int = 3): DataFrame =
+    pagerank(Tables.documents(s, d), Dedup.lshPairsCached(s, d), iters)
 
   /** Triangle enumeration core over an undirected pair set (`pairs`:
     * doc_a, doc_b, one row per edge). Degree orientation: every edge
@@ -93,17 +88,16 @@ object Graph {
     * oriented edge table materializes once (it feeds both sides of the
     * wedge join and the closing probe).
     */
-  private[operators] def triangles(pairs: DataFrame, materialize: Boolean = true): DataFrame = {
+  private[operators] def triangles(pairs: DataFrame): DataFrame = {
     val und = pairs.select(col("doc_a"), col("doc_b"))
       .unionAll(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
     val deg = und.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("dg"))
-    val oriented0 = und
+    val oriented = Share(und
       .join(deg.select(col("v").as("doc_a"), col("dg").as("deg_a")), Seq("doc_a"))
       .join(deg.select(col("v").as("doc_b"), col("dg").as("deg_b")), Seq("doc_b"))
       .filter(col("deg_a") < col("deg_b") ||
         (col("deg_a") === col("deg_b") && col("doc_a") < col("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val oriented = if (materialize) oriented0.localCheckpoint(true) else oriented0
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     val tri = oriented.as("e1")
       .join(oriented.select(col("src").as("mid"), col("dst").as("w")),
         col("e1.dst") === col("mid"))
@@ -119,8 +113,8 @@ object Graph {
     * many triangles sits in a tight near-duplicate clique, not a
     * chance collision). Nodes in no triangle are absent (count 0).
     */
-  def triangleCount(s: SparkSession, d: String, materialize: Boolean = true): DataFrame =
-    triangles(Dedup.lshPairsCached(s, d), materialize)
+  def triangleCount(s: SparkSession, d: String): DataFrame =
+    triangles(Dedup.lshPairsCached(s, d))
 
   /** Rounds-bounded k-core peel over an undirected pair set: each
     * synchronized round recomputes degrees within the surviving
@@ -142,29 +136,25 @@ object Graph {
     * variant would iterate until alive-count stabilizes, exactly like
     * connectedComponents.
     */
-  private[graft] def kCore(pairs: DataFrame, k: Int, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+  private[graft] def kCore(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     val und = pairs.select(col("doc_a"), col("doc_b"))
-    val edges0 = und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(und.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val edges = if (materialize) edges0.localCheckpoint(true) else edges0
+    val edges = Share(und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(und.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     def aliveDeg(alive: DataFrame): DataFrame = edges
       .join(alive.select(col("v").as("src")), Seq("src"))
       .join(alive.select(col("v").as("dst")), Seq("dst"))
       .groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var alive = edges.select(col("src").as("v")).distinct()
     for (_ <- 1 to rounds) {
-      val next = aliveDeg(alive).filter(col("deg") >= k)
-        .select(col("src").as("v"))
-      alive = if (materialize) next.localCheckpoint(true) else next
+      alive = Share(aliveDeg(alive).filter(col("deg") >= k)
+        .select(col("src").as("v")))
     }
     aliveDeg(alive).select(col("src").as("doc_id"), col("deg"))
   }
 
   /** 2-core of the MinHash-LSH candidate graph after 4 peel rounds. */
-  def kCoreDocs(s: SparkSession, d: String, k: Int = 2, rounds: Int = 4,
-      materialize: Boolean = true): DataFrame =
-    kCore(Dedup.lshPairsCached(s, d), k, rounds, materialize)
+  def kCoreDocs(s: SparkSession, d: String, k: Int = 2, rounds: Int = 4): DataFrame =
+    kCore(Dedup.lshPairsCached(s, d), k, rounds)
 
   /** Rounds-bounded synchronous majority label propagation — community
     * detection over an undirected pair set. label_0(v) = v; each round
@@ -185,13 +175,11 @@ object Graph {
     * never a corpus sort. Fixed rounds keep the plan depth static and
     * the oracle replayable as unrolled CTEs (the pagerank discipline).
     */
-  private[graft] def labelPropagation(pairs: DataFrame, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+  private[graft] def labelPropagation(pairs: DataFrame, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val und = pairs.select(col("doc_a"), col("doc_b"))
-    val edges0 = und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(und.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val edges = if (materialize) edges0.localCheckpoint(true) else edges0
+    val edges = Share(und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionAll(und.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     var lab = edges.select(col("src").as("v")).distinct()
       .withColumn("lab", col("v"))
     val pick = Window.partitionBy(col("v"))
@@ -199,13 +187,12 @@ object Graph {
     for (_ <- 1 to rounds) {
       // every vertex has >= 1 neighbor by construction (it came off the
       // edge list), so the majority pick covers the whole node set
-      val next = edges
+      lab = Share(edges
         .join(lab.withColumnRenamed("v", "src"), Seq("src"))
         .groupBy(col("dst").as("v"), col("lab")).agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(pick))
         .filter(col("rn") === 1)
-        .select(col("v"), col("lab"))
-      lab = if (materialize) next.localCheckpoint(true) else next
+        .select(col("v"), col("lab")))
     }
     lab.select(col("v").as("doc_id"), col("lab").as("community"))
   }
@@ -213,9 +200,8 @@ object Graph {
   /** 3-round majority-LP communities of the MinHash-LSH candidate
     * graph — one row per graph vertex with its community label.
     */
-  def communityLabels(s: SparkSession, d: String, rounds: Int = 3,
-      materialize: Boolean = true): DataFrame =
-    labelPropagation(Dedup.lshPairsCached(s, d), rounds, materialize)
+  def communityLabels(s: SparkSession, d: String, rounds: Int = 3): DataFrame =
+    labelPropagation(Dedup.lshPairsCached(s, d), rounds)
 
   /** Resource-allocation link prediction over an undirected pair set:
     * for every wedge-closed NON-edge (a, b), the RA index
@@ -231,11 +217,10 @@ object Graph {
     * edge set is removed with a keyed anti-join.
     */
   private[operators] def linkPrediction(pairs: DataFrame,
-      maxDeg: Int = 64, materialize: Boolean = true): DataFrame = {
+      maxDeg: Int = 64): DataFrame = {
     val und = pairs.select(col("doc_a"), col("doc_b"))
-    val edges0 = und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(und.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val edges = if (materialize) edges0.localCheckpoint(true) else edges0
+    val edges = Share(und.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(und.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val w = edges.as("e1")
       .join(edges.as("e2"), col("e1.src") === col("e2.src"))

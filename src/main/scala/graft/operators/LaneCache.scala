@@ -66,12 +66,15 @@ object LaneCache {
     * iff the stamp (source dir + source-table fingerprints + generator
     * fingerprint) does not match the current cache. `derive` is only
     * evaluated on a miss. Superseded versions survive `graceTtlMs`
-    * after the rebuild that replaced them (see the GC note below). */
+    * after the rebuild that replaced them (see the GC note below). In
+    * [[Share.lineage]] mode it returns `derive` itself and touches no
+    * cache: the consumer's plan then shows the lane's full lineage. */
   def cached(s: SparkSession, srcDir: String, lane: String, genFp: String,
              srcTables: Seq[String],
              cacheRoot: String = "target/lane_cache",
              graceTtlMs: Long = 30L * 60 * 1000)
             (derive: => DataFrame): DataFrame = {
+    if (Share.inLineage) return derive
     val src = new java.io.File(srcDir).getCanonicalFile
     val key = lane + "__" +
       src.getPath.stripPrefix("/").replaceAll("[^A-Za-z0-9._-]", "_")

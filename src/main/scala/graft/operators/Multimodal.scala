@@ -38,35 +38,13 @@ object Multimodal {
         length(col("text").cast("binary")).as("n_bytes"),
         col("source").as("origin")).as("meta"))
 
-  /** STUB decoder: a real build would hand `payload` to a codec here.
-    * The fake derives a fixed-size feature vector from byte statistics
-    * — deterministic, schema-correct, batch-shaped like the real one.
-    */
-  def decodeStub(payload: Array[Byte]): Array[Double] = {
-    val nFeat = 8
-    val acc = new Array[Double](nFeat)
-    var i = 0
-    while (i < payload.length) {
-      acc(i % nFeat) += (payload(i) & 0xff).toDouble
-      i += 1
-    }
-    val n = math.max(payload.length / nFeat, 1)
-    acc.map(v => v / n / 255.0)
-  }
-
-  /** Frame sampling: every `stride`-th byte ("frame") of the payload. */
-  def frameSample(payload: Array[Byte], stride: Int): Array[Byte] = {
-    val out = new Array[Byte]((payload.length + stride - 1) / stride)
-    var i = 0
-    var j = 0
-    while (i < payload.length) { out(j) = payload(i); i += stride; j += 1 }
-    out
-  }
-
-  /** Fused sample+decode — semantically `decodeStub(frameSample(p, stride))`
-    * (pinned equal in MultimodalSpec) without materializing the frame
-    * array: one primitive while-loop per row, zero allocation beyond the
-    * 8-double accumulator. This is the hot path the decode query runs.
+  /** The byte-statistics decoder, standing in for a codec: every
+    * `stride`-th byte ("frame") of the payload accumulates into a fixed
+    * 8-double feature vector — one primitive while-loop per row, no
+    * allocation beyond the accumulator. Returns (frames read,
+    * features). Pinned by the `multimodal_decode` oracle, which replays
+    * it in SQL, and by MultimodalSpec's `decodeFeatures` test. This is
+    * the hot path the decode query runs.
     */
   def decodeStrided(payload: Array[Byte], stride: Int): (Int, Array[Double]) = {
     val nFeat = 8

@@ -198,9 +198,8 @@ object Profile {
     // materialize the bounded key-count table ONCE — without it both
     // the stats aggregate and the flag filter re-derive it from the
     // corpus and the plan scans events twice (caught via Explain)
-    val counts = Tables.events(s, d)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val counts = Share(Tables.events(s, d)
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n")))
     val stats = counts.agg(
       sum(col("n")).as("total"), count(lit(1)).as("n_keys"))
     counts.crossJoin(broadcast(stats))

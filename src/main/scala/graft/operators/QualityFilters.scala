@@ -203,13 +203,12 @@ object QualityFilters {
         p => p.getField("m")).as("c"))
       .select(col("seed").as("cluster_id"), col("c"))
     val score = round(dot(col("c"), col("c")) - lit(2) * dot(col("v"), col("c")), 6)
-    val assigned = e.join(broadcast(cent))
+    val assigned = Share(e.join(broadcast(cent))
       .groupBy(col("vec_id"))
       .agg(min_by(struct(col("cluster_id"), col("v")),
         struct(score.as("score"), col("cluster_id"))).as("best"))
       .select(col("vec_id"), col("best.cluster_id").as("cluster_id"), col("best.v").as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .localCheckpoint(true)
+      .withColumn("nrm", norm2(col("v"))))
     // bucketed self-join (r14, guide §2.2 — the embeddingCosineNeardup
     // rationale): joined on cluster_id alone the pair stage runs on at
     // most k=16 partitions and AQE coalesces them further (JobProbe:
@@ -288,10 +287,9 @@ object QualityFilters {
     // trees into the shingle lambdas — re-evaluated per element
     // (measured: the pipeline went from unbounded (>5 min at sf0.01)
     // to 3 s with the barrier).
-    val kept = sig
+    val kept = Share(sig
       .select(col("doc_id"), col("source"), topPpm.as("top_ppm"),
-        triPpm.as("tri_ppm"), ent.as("ent"), redTokens.as("n_tokens"))
-      .localCheckpoint(true)
+        triPpm.as("tri_ppm"), ent.as("ent"), redTokens.as("n_tokens")))
       .filter(col("top_ppm") <= 200000 && col("tri_ppm") <= 300000 &&
         col("ent") >= 2.7 && pmod(col("doc_id"), lit(97)) =!= 0 &&
         pmod(hash60(concat(lit("mix"), col("doc_id").cast("string"))),
@@ -323,11 +321,10 @@ object QualityFilters {
     * gram table is materialized once for its two consumers.
     */
   def boilerplateDetect(s: SparkSession, d: String): DataFrame = {
-    val grams = Tables.documents(s, d)
+    val grams = Share(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"),
-        explode(array_distinct(gramHashes(col("toks"), 3))).as("h"))
-      .localCheckpoint(true)
+        explode(array_distinct(gramHashes(col("toks"), 3))).as("h")))
     val srcDocs = Tables.documents(s, d)
       .groupBy(col("source")).agg(countDistinct(col("doc_id")).as("n_docs"))
     val gramDf = grams.groupBy(col("source"), col("h"))

@@ -97,37 +97,29 @@ object Sketch {
     * types eviction-free; for distributions flatter than 1/(cap+1) the
     * honest answer is the full vocabulary agg (token_freq_spectrum's
     * plan), not a sketch.
-    *
-    * `materialize = false` returns the same composition fully LAZY (no
-    * checkpoints, no certificate) — PlanGuardSpec lints that twin, so
-    * the pass-2 join shape stays visible to the cartesian check that
-    * the eager form's checkpoint would otherwise hide.
     */
-  def heavyHitters(s: SparkSession, d: String, k: Int = 20, cap: Int = 1024,
-      materialize: Boolean = true): DataFrame = {
+  def heavyHitters(s: SparkSession, d: String, k: Int = 20, cap: Int = 1024): DataFrame = {
     import s.implicits._
     def toks = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("token"))
 
     // pass 1: bounded summary table (≤ partitions x (cap+1) rows) —
-    // eager localCheckpoint because it feeds both the candidate join
-    // and the two certificate scalars
-    val summaryLazy = toks.as[String]
+    // shared because it feeds both the candidate join and the two
+    // certificate scalars
+    val summary = Share(toks.as[String]
       .mapPartitions(it => misraGries(it, cap))
-      .toDF("token", "part_total", "evictions")
-    val summary = if (materialize) summaryLazy.localCheckpoint(true) else summaryLazy
+      .toDF("token", "part_total", "evictions"))
     val cands = summary.filter(col("token").isNotNull).select("token").distinct()
 
     // pass 2: exact recount of candidates only; the agg shuffle carries
     // candidate tokens, never the full vocabulary
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cnt").desc, col("token"))
-    val topLazy = toks.join(broadcast(cands), Seq("token"))
+    // shared: certificate + result
+    val top = Share(toks.join(broadcast(cands), Seq("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-    if (!materialize) return topLazy
-    val top = topLazy.localCheckpoint(true) // materialize once: certificate + result
+      .filter(col("rank") <= k))
 
     // driver-side exactness certificate (bounded scalar aggregates on
     // the checkpointed tables — no extra corpus scan)
@@ -188,8 +180,7 @@ object Sketch {
     * estimate carries the documented HLL small-range bias (visible at
     * sf0.001; at sf0.01+ the groups sit in the ±1.04/√m ≈ 3% regime).
     */
-  def hllDistinct(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def hllDistinct(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
     // ONE lineitem pass (r13, guide §2.3/§2.4): the distinct
     // (flag, orderkey) spine feeds BOTH consumers — the exact count is
@@ -215,11 +206,13 @@ object Sketch {
     // 1024 registers and the merge query reads the tiny register
     // table; this operator is the self-contained replay of that merge
     // algebra at a grain one query can afford.
-    val pairsLazy = li
+    val pairs = Share(li
       .filter(col("l_orderkey").isNotNull)
-      .select(col("l_returnflag"), col("l_orderkey")).distinct()
-    val pairs = if (materialize) pairsLazy.localCheckpoint(true) else pairsLazy
-    val mergedLazy = pairs
+      .select(col("l_returnflag"), col("l_orderkey")).distinct())
+    // share the MERGED registers (<= groups x 1024 rows — KBs), never
+    // the per-grain table: the bounded register table is the only
+    // thing two consumers re-read
+    val merged = Share(pairs
       .select(col("l_returnflag"),
         hash60(col("l_orderkey").cast("string")).as("hv"))
       .select(col("l_returnflag"),
@@ -228,12 +221,7 @@ object Sketch {
       .withColumn("rho",
         when(col("rem") === 0L, lit(51))
           .otherwise(lit(51) - length(bin(col("rem")))))
-      .groupBy(col("l_returnflag"), col("bucket")).agg(max(col("rho")).as("r"))
-    // checkpoint the MERGED registers (<= groups x 1024 rows — KBs),
-    // never the per-grain table: the bounded register table is the
-    // only thing two consumers re-read
-    val merged =
-      if (materialize) mergedLazy.localCheckpoint(true) else mergedLazy
+      .groupBy(col("l_returnflag"), col("bucket")).agg(max(col("rho")).as("r")))
     def estimate(reg: DataFrame, out: String): DataFrame =
       reg.groupBy(col("l_returnflag"))
         .agg((sum(expr("shiftleft(cast(1 as bigint), 51 - r)")) +
@@ -277,18 +265,16 @@ object Sketch {
     * pattern): production lookups would read the 4096-row register
     * table alone.
     */
-  def cmsketchEval(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def cmsketchEval(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("token"))
     def bucketCols(t: Column): Column = array((0 until 4).map { i =>
       pmod(hash60(concat(lit(s"cm${i}_"), t)), lit(1024L))
     }: _*)
-    val regsLazy = toks
-      .select(posexplode(bucketCols(col("token"))).as(Seq("row_i", "bucket")))
-      .groupBy(col("row_i"), col("bucket")).agg(count(lit(1)).as("c"))
     // bounded (<= 4096 rows) register table read once per lookup join
-    val regs = if (materialize) regsLazy.localCheckpoint(true) else regsLazy
+    val regs = Share(toks
+      .select(posexplode(bucketCols(col("token"))).as(Seq("row_i", "bucket")))
+      .groupBy(col("row_i"), col("bucket")).agg(count(lit(1)).as("c")))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cnt").desc, col("token"))
     val top = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -321,8 +307,7 @@ object Sketch {
     * sums, one IEEE double division) — the DuckDB oracle replays every
     * register of every pair.
     */
-  def hllUnion(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def hllUnion(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val li = Tables.lineitem(s, d)
     // ONE lineitem pass and ONE corpus-sized exchange (r14, guide
@@ -340,12 +325,13 @@ object Sketch {
     // second lineitem scan; this shape subsumes both. The oracle still
     // computes every channel from raw rows — cross-engine proof, not a
     // shared subtree.
-    val byOrderLazy = li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_returnflag")).as("fs"))
-    val byOrder = if (materialize) byOrderLazy.localCheckpoint(true) else byOrderLazy
+    val byOrder = Share(li.groupBy(col("l_orderkey"))
+      .agg(collect_set(col("l_returnflag")).as("fs")))
     val spine = byOrder
       .select(col("l_orderkey"), explode(col("fs")).as("src"))
-    val regsLazy = spine
+    // bounded register table (<= |domain| x 1024 rows), read by four
+    // consumers below
+    val regs = Share(spine
       .select(col("src"),
         hash60(col("l_orderkey").cast("string")).as("hv"))
       .select(col("src"), shiftright(col("hv"), 50).as("bucket"),
@@ -353,10 +339,7 @@ object Sketch {
       .withColumn("rho",
         when(col("rem") === 0L, lit(51))
           .otherwise(lit(51) - length(bin(col("rem")))))
-      .groupBy(col("src"), col("bucket")).agg(max(col("rho")).as("r"))
-    // bounded register table (<= |domain| x 1024 rows), read by four
-    // consumers below
-    val regs = if (materialize) regsLazy.localCheckpoint(true) else regsLazy
+      .groupBy(col("src"), col("bucket")).agg(max(col("rho")).as("r")))
     def estCol(sScaled: Column): Column =
       floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(1024.0)) *
         lit(1048576.0) * lit(2251799813685248.0) /
@@ -498,16 +481,15 @@ object Sketch {
       .groupBy(col("row_i"), col("bucket"))
       .agg(count(lit(1)).as("c"), sum(col("sg")).as("cs"))
 
-  def joinSizeEstimate(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def joinSizeEstimate(s: SparkSession, d: String): DataFrame = {
     val re = registerSketch(Tables.events(s, d), col("user_id"))
     val ro = registerSketch(Tables.orders(s, d), col("o_custkey"))
       .withColumnRenamed("c", "co").withColumnRenamed("cs", "cso")
-    val estLazy = re.join(ro, Seq("row_i", "bucket"))
+    // 4 rows; read by the summary AND the output
+    val est = Share(re.join(ro, Seq("row_i", "bucket"))
       .groupBy(col("row_i"))
       .agg(sum(col("c") * col("co")).as("cm_est"),
-        sum(col("cs") * col("cso")).as("agms_est"))
-    val est = if (materialize) estLazy.localCheckpoint(true) else estLazy // 4 rows; read by the summary AND the output
+        sum(col("cs") * col("cso")).as("agms_est")))
     val fe = Tables.events(s, d).groupBy(col("user_id").as("k"))
       .agg(count(lit(1)).as("f"))
     val fo = Tables.orders(s, d).groupBy(col("o_custkey").as("k"))

@@ -458,13 +458,11 @@ object Temporal {
     * exact month deltas — one correctly-rounded division per pair on
     * both engines.
     */
-  private[operators] def theilSen(rev: DataFrame,
-      materialize: Boolean = true): DataFrame = {
+  private[operators] def theilSen(rev: DataFrame): DataFrame = {
     // bounded (nation, m, rc) table feeds three consumers (two join
-    // sides + the month census) — materialize once, never re-derive
-    // the corpus aggregate through lineage (materialize = false keeps
-    // the composition lazy for the PlanGuardSpec join-shape lint)
-    val r = if (materialize) rev.localCheckpoint(true) else rev
+    // sides + the month census) — shared, never re-derive the corpus
+    // aggregate through lineage
+    val r = Share(rev)
     val slopes = r.select(col("nation"), col("m").as("m1"), col("rc").as("r1"))
       .join(r.select(col("nation"), col("m").as("m2"), col("rc").as("r2")),
         Seq("nation"))
@@ -485,12 +483,9 @@ object Temporal {
       .select(col("nation"), col("n_months"), col("n_pairs"), col("trend"))
   }
 
-  def theilSenTrend(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame =
-    theilSen(
-      materialize = materialize,
-      rev = monthlyRevenueCents(Tables.orders(s, d),
-        Tables.customer(s, d), Tables.nation(s, d)))
+  def theilSenTrend(s: SparkSession, d: String): DataFrame =
+    theilSen(monthlyRevenueCents(Tables.orders(s, d),
+      Tables.customer(s, d), Tables.nation(s, d)))
 
   /** Shared (nation, month) exact-cents revenue lane — the corpus-
     * sized stage under both trend estimators (the lane is

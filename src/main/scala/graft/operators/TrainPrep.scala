@@ -42,9 +42,8 @@ object TrainPrep {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))
-    val tf = base.groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = Share(base.groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf")))
     val vocab = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
     val total = vocab.agg(sum(col("cnt")).as("t_tokens"))
     val sumLl = aggregate(col("terms"), lit(0.0),
@@ -150,10 +149,9 @@ object TrainPrep {
     * lattice to disagree on.
     */
   def dupSpanDetect(s: SparkSession, d: String): DataFrame = {
-    val grams = Tables.documents(s, d)
+    val grams = Share(Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(gramHashes(col("toks"), SpanK)).as("h"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), explode(gramHashes(col("toks"), SpanK)).as("h")))
     // "appears in >1 document" needs only min(doc_id) != max(doc_id),
     // not the distinct count: the countDistinct form planned TWO
     // full-gram-set exchanges ((h, doc_id) dedup, then h), the min/max
@@ -380,17 +378,16 @@ object TrainPrep {
     * the model is dimension-tiny and broadcasts; scoring is a
     * broadcast join + two hash aggregates keyed by doc.
     */
-  def nbDomainAttribution(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def nbDomainAttribution(s: SparkSession, d: String): DataFrame = {
     val K = 4
-    val tfcLazy = Tables.documents(s, d)
+    // read by the model build AND the scorer
+    val tfc = Share(Tables.documents(s, d)
       .select(col("doc_id"),
         pmod(graft.functions.Hash60.hash60(col("source")), lit(K.toLong))
           .as("dom_true"),
         explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("dom_true"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val tfc = if (materialize) tfcLazy.localCheckpoint(true) else tfcLazy // read by the model build AND the scorer
+      .agg(count(lit(1)).as("tf")))
     val cnt = tfc.groupBy(col("dom_true").as("dom"), col("term"))
       .agg(sum(col("tf")).as("c"))
     // literal bounds so the model cross-expansion is provably finite
@@ -463,8 +460,7 @@ object TrainPrep {
     * per-row, shuffle-free. At 100 TB the vocabulary/totals are built
     * on the target+sample once and reused across daily drops.
     */
-  def importanceResample(s: SparkSession, d: String,
-      materialize: Boolean = true): DataFrame = {
+  def importanceResample(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
       .select(col("doc_id"),
         (pmod(graft.functions.Hash60.hash60(col("source")), lit(4L)) === 0L)
@@ -472,9 +468,8 @@ object TrainPrep {
         tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("tgt"),
         size(col("toks")).cast("long").as("dl"), explode(col("toks")).as("term"))
-    val tf0 = base.groupBy(col("doc_id"), col("tgt"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val tf = if (materialize) tf0.localCheckpoint(true) else tf0
+    val tf = Share(base.groupBy(col("doc_id"), col("tgt"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf")))
     val vocab = tf.groupBy(col("term")).agg(
       sum(when(col("tgt"), col("tf")).otherwise(0L)).as("tc"),
       sum(col("tf")).as("rc"))

@@ -148,9 +148,9 @@ object VectorOps {
     * float noise anywhere. Scale shape: centroid = one map-side-
     * partial agg to 64 rows, broadcast back; distances are narrow;
     * the two medians run over the bounded (vec_id, dist2) table,
-    * pinned once (localCheckpoint) for its three consumers.
+    * shared once ([[Share]]) by its three consumers.
     */
-  def embeddingOutliers(s: SparkSession, d: String, materialize: Boolean = true): DataFrame = {
+  def embeddingOutliers(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       transform(col("embedding"),
         x => round(x.cast("double") * 1e6).cast("long")).as("xm"))
@@ -160,10 +160,9 @@ object VectorOps {
         (col("sm").cast("double") / col("n")).as("m")))),
         p => p.getField("m")).as("c"))
     val diff = zip_with(col("xm"), col("c"), (x, m) => x.cast("double") - m)
-    val dd0 = e.crossJoin(broadcast(cent))
+    val dd = Share(e.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("label"),
-        round(dot(diff, diff) / lit(1e12), 6).as("dist2"))
-    val dd = if (materialize) dd0.localCheckpoint(true) else dd0
+        round(dot(diff, diff) / lit(1e12), 6).as("dist2")))
     val med = dd.agg(round(median(col("dist2")), 6).as("med"))
     val dm = dd.crossJoin(broadcast(med))
     val mad = dm.agg(round(median(abs(col("dist2") - col("med"))), 6).as("mad"))

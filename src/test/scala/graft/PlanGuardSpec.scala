@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 
-/** Plan lint over EVERY registered query: each must analyze + plan
-  * cleanly against the test corpus, and no plan may contain an
-  * unkeyed CartesianProductExec — the shape that cannot run at scale.
+/** Plan lint over EVERY registered query's full lineage
+  * (`Share.lineage`): each must analyze + plan cleanly against the
+  * test corpus, and no plan may contain an unkeyed
+  * CartesianProductExec — the shape that cannot run at scale.
   * (Broadcast nested-loop joins against 1-row aggregates or pinned
   * tiny query sets are legitimate and are not flagged.) This catches a
   * future operator that accidentally drops its join key long before
@@ -12,41 +14,15 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   */
 class PlanGuardSpec extends SparkTestBase {
 
-  // Queries whose registered form EAGERLY materializes internal stages
-  // (localCheckpoint + driver certificate): linting that form would
-  // execute the job and see only a checkpoint-RDD scan. These lazy
-  // twins are the same composition with materialization off, so the
-  // join shapes stay visible to the cartesian check.
-  private val lazyTwins: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    "heavy_hitters" -> ((s, d) => graft.operators.Sketch.heavyHitters(s, d, materialize = false)),
-    "similarity_pagerank" -> ((s, d) => graft.operators.Graph.similarityPagerank(s, d, materialize = false)),
-    "triangle_count" -> ((s, d) => graft.operators.Graph.triangleCount(s, d, materialize = false)),
-    "ann_eval" -> ((s, d) => graft.operators.Ann.annEval(s, d, materialize = false)),
-    "vocab_coverage" -> ((s, d) => graft.operators.CorpusAnalytics.vocabCoverage(s, d, materialize = false)),
-    "embedding_outliers" -> ((s, d) => graft.operators.VectorOps.embeddingOutliers(s, d, materialize = false)),
-    "hll_distinct" -> ((s, d) => graft.operators.Sketch.hllDistinct(s, d, materialize = false)),
-    "cmsketch_eval" -> ((s, d) => graft.operators.Sketch.cmsketchEval(s, d, materialize = false)),
-    "hll_union" -> ((s, d) => graft.operators.Sketch.hllUnion(s, d, materialize = false)),
-    "dup_span_rewrite" -> ((s, d) => graft.operators.Dedup.dupSpanRewrite(s, d, materialize = false)),
-    "cross_doc_spans" -> ((s, d) => graft.operators.Dedup.crossDocSpans(s, d, materialize = false)),
-    "span_coverage_incremental" -> ((s, d) => graft.operators.Dedup.spanCoverageIncremental(s, d, materialize = false)),
-    "fuzzy_match_census" -> ((s, d) => graft.operators.Dedup.fuzzyMatchCensus(s, d, materialize = false)),
-    "source_divergence" -> ((s, d) => graft.operators.CorpusAnalytics.sourceDivergence(s, d, materialize = false)),
-    "source_overlap" -> ((s, d) => graft.operators.CorpusAnalytics.sourceOverlap(s, d, materialize = false)),
-    "nb_domain_attribution" -> ((s, d) => graft.operators.TrainPrep.nbDomainAttribution(s, d, materialize = false)),
-    "join_size_estimate" -> ((s, d) => graft.operators.Sketch.joinSizeEstimate(s, d, materialize = false)),
-    "k_core" -> ((s, d) => graft.operators.Graph.kCoreDocs(s, d, materialize = false)),
-    "importance_resample" -> ((s, d) => graft.operators.TrainPrep.importanceResample(s, d, materialize = false)),
-    "label_propagation" -> ((s, d) => graft.operators.Graph.communityLabels(s, d, materialize = false)),
-    "theil_sen_trend" -> ((s, d) => graft.operators.Temporal.theilSenTrend(s, d, materialize = false)))
+  // every registered query's full-lineage plan, built once for both lints
+  private lazy val lineagePlans: Seq[(String, SparkPlan)] = graft.operators.Share.lineage {
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) => n -> fn(spark, sf).queryExecution.executedPlan }
+  }
 
   test("every registered query plans without a cartesian product") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val lintFn = lazyTwins.getOrElse(name, fn)
-        val plan = lintFn(spark, sf).queryExecution.executedPlan
-        val cart = Harness.flatten(plan).exists(_.isInstanceOf[CartesianProductExec])
-        if (cart) Some(name) else None
+    val offenders = lineagePlans.collect {
+      case (name, plan) if Harness.flatten(plan).exists(_.isInstanceOf[CartesianProductExec]) =>
+        name
     }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
@@ -177,7 +153,6 @@ class PlanGuardSpec extends SparkTestBase {
     // 8-vector ANN query set); both leave a bounding node — a scalar
     // aggregate or a literal filter — in the broadcast subtree. A raw
     // scan with neither is flagged.
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
@@ -190,10 +165,8 @@ class PlanGuardSpec extends SparkTestBase {
       case _: org.apache.spark.sql.execution.LocalTableScanExec => true
       case _ => false
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val lintFn = lazyTwins.getOrElse(name, fn)
-        val plan = lintFn(spark, sf).queryExecution.executedPlan
+    val offenders = lineagePlans.flatMap {
+      case (name, plan) =>
         Harness.flatten(plan).collect {
           case j: BroadcastNestedLoopJoinExec =>
             val bc = j.buildSide match {

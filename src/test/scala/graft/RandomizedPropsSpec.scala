@@ -186,11 +186,10 @@ class RandomizedPropsSpec extends SparkTestBase {
         }
         val expected = adj.view.mapValues(_.size.toLong).toMap
         // synchronized peel depth on <= 20 vertices is <= 10 rounds;
-        // materialize=true truncates the per-round lineage (a lazy
+        // the eager share points truncate the per-round lineage (a lazy
         // 12-round composition re-analyzes a deeply nested plan)
         val got = operators.Graph.kCore(
-          edges.toDF("doc_a", "doc_b"), k = 2, rounds = 12,
-          materialize = true)
+          edges.toDF("doc_a", "doc_b"), k = 2, rounds = 12)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == expected, s"trial $trial: $edges")
       }
@@ -220,7 +219,7 @@ class RandomizedPropsSpec extends SparkTestBase {
           }
         }
         val got = operators.Graph.labelPropagation(
-          edges.toDF("doc_a", "doc_b"), rounds = 3, materialize = true)
+          edges.toDF("doc_a", "doc_b"), rounds = 3)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == lab, s"trial $trial: $edges")
       }

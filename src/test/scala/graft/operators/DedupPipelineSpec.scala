@@ -28,21 +28,6 @@ class DedupPipelineSpec extends SparkTestBase {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("connectedComponents: parquet-checkpoint mode (100 TB path) matches in-memory") {
-    import spark.implicits._
-    val edges = ((0 until 29).map(i => (i.toLong, i.toLong + 1)) ++
-      Seq((100L, 101L), (200L, 201L), (201L, 202L))).toDF("doc_a", "doc_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    val viaParquet = Dedup.connectedComponents(edges, Some(dir))
-      .as[(Long, Long)].collect().toMap
-    val inMemory = Dedup.connectedComponents(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(viaParquet === inMemory)
-    assert(viaParquet(29L) === 0L && viaParquet(202L) === 200L)
-    // per-iteration label tables actually landed on disk
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("labels-")))
-  }
-
   test("dedup_pipeline: covers the corpus with one canonical min-id per cluster") {
     val docs = graft.Tables.documents(spark, sf).count()
     val out = Dedup.dedupPipeline(spark, sf).cache()

@@ -70,14 +70,15 @@ class EvalOpsSpec extends SparkTestBase {
   }
 
   test("ann_eval: lane-read result equals the full inline recompute") {
-    // the registered form reads the four ANN lanes (r14); materialize
-    // = false recomputes every component inline — they must agree
-    // row-for-row, which also proves each lane IS its defining
-    // operator's output on this corpus
-    val lane = Ann.annEval(spark, sf).collect().map(_.toSeq.toString).sorted.toSeq
-    val live = Ann.annEval(spark, sf, materialize = false)
-      .collect().map(_.toSeq.toString).sorted.toSeq
-    assert(lane == live)
+    // the registered form reads the four ANN lanes (r14); in lineage
+    // mode every component recomputes inline and no lane is read —
+    // they must agree row-for-row, which also proves each lane IS its
+    // defining operator's output on this corpus
+    val (lane, live) = (Ann.annEval(spark, sf), Share.lineage(Ann.annEval(spark, sf)))
+    assert(lane.inputFiles.exists(_.contains("lane_cache")))
+    assert(!live.inputFiles.exists(_.contains("lane_cache")))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
+    assert(rows(lane) == rows(live))
   }
 
   test("vocab_coverage: OOV bounded, totals reconcile with the tokenizer") {

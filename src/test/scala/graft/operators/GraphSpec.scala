@@ -31,13 +31,13 @@ class GraphSpec extends SparkTestBase {
     // triangle {1,2,3} with pendant 4: each triangle member counts 1,
     // the pendant is absent (0 triangles)
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
-    val got = Graph.triangles(tri, materialize = false).collect()
+    val got = Share.lineage(Graph.triangles(tri).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     // K4: C(3,2) = 3 triangles through every node
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("doc_a", "doc_b")
-    val got4 = Graph.triangles(k4, materialize = false).collect()
+    val got4 = Share.lineage(Graph.triangles(k4).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got4 == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
@@ -68,14 +68,14 @@ class GraphSpec extends SparkTestBase {
     // round 2 drops the now-pendant 4; the triangle survives at deg 2
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
       .toDF("doc_a", "doc_b")
-    val got = Graph.kCore(g, k = 2, rounds = 4, materialize = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = Share.lineage(Graph.kCore(g, k = 2, rounds = 4).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
     // a 4-cycle is its own 2-core: nothing peels even though no
     // triangle exists — k-core sees density coarser than triangles
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)).toDF("doc_a", "doc_b")
-    val gotC = Graph.kCore(cyc, k = 2, rounds = 4, materialize = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gotC = Share.lineage(Graph.kCore(cyc, k = 2, rounds = 4).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotC == Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 2L))
   }
 
@@ -97,8 +97,8 @@ class GraphSpec extends SparkTestBase {
     // the cliques (CC would collapse all six into one cluster).
     val g = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L)).toDF("doc_a", "doc_b")
-    val got = Graph.labelPropagation(g, rounds = 3, materialize = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = Share.lineage(Graph.labelPropagation(g, rounds = 3).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 3L, 5L -> 3L, 6L -> 3L))
   }

@@ -11,9 +11,8 @@ class LinkPredictionSpec extends SparkTestBase {
 
   private def run(edges: Seq[(Long, Long)], maxDeg: Int = 64) = {
     import spark.implicits._
-    Graph.linkPrediction(edges.toDF("doc_a", "doc_b"), maxDeg,
-      materialize = false)
-      .collect()
+    Share.lineage(Graph.linkPrediction(edges.toDF("doc_a", "doc_b"), maxDeg)
+      .collect())
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
       .toMap
   }
@@ -56,10 +55,9 @@ class LinkPredictionSpec extends SparkTestBase {
       .collect { case (pair, contribs) if !edgeSet.contains(pair) =>
         pair -> ((contribs.size.toLong, contribs.map(c => 1000000L / c._2).sum))
       }.toMap
-    val got = Graph.linkPrediction(
+    val got = Share.lineage(Graph.linkPrediction(
       VectorOps.knnGraph(spark, sf)
-        .select(col("src_id").as("doc_a"), col("dst_id").as("doc_b")),
-      materialize = false).collect()
+        .select(col("src_id").as("doc_a"), col("dst_id").as("doc_b"))).collect())
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expected)

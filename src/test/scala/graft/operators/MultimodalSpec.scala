@@ -3,8 +3,8 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Multimodal plumbing: schema, deterministic stub decode, frame
-  * sampling, and the typed mapPartitions path.
+/** Multimodal plumbing: schema, the typed mapPartitions decode path,
+  * and the BMP and WAV parsers.
   */
 class MultimodalSpec extends SparkTestBase {
 
@@ -16,20 +16,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(meta.fieldNames.toSeq == Seq("mime", "n_bytes", "origin"))
     val r = m.select(col("meta.n_bytes"), length(col("payload"))).head()
     assert(r.getInt(0) == r.getInt(1))
-  }
-
-  test("decodeStub is deterministic and fixed-size") {
-    val bytes = "hello multimodal world".getBytes("UTF-8")
-    val a = Multimodal.decodeStub(bytes)
-    val b = Multimodal.decodeStub(bytes)
-    assert(a.toSeq == b.toSeq)
-    assert(a.length == 8)
-    assert(a.forall(v => v >= 0 && v <= 1.001))
-  }
-
-  test("frameSample takes every k-th byte") {
-    val bytes = Array.tabulate[Byte](10)(_.toByte)
-    assert(Multimodal.frameSample(bytes, 3).toSeq == Seq[Byte](0, 3, 6, 9))
   }
 
   test("decodeFeatures: typed mapPartitions path, one row per doc") {

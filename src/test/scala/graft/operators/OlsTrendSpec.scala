@@ -49,16 +49,15 @@ class OlsTrendSpec extends SparkTestBase {
     assert(olsClean == 1.0)
     assert(math.abs(olsSpiked - olsClean) > 5.0,
       s"OLS should chase the outlier, got $olsSpiked")
-    val ts = Temporal.theilSen(
-      spiked.toDF("nation", "m", "rc"), materialize = false)
-      .collect().head.getDouble(3)
+    val ts = Share.lineage(Temporal.theilSen(spiked.toDF("nation", "m", "rc"))
+      .collect().head.getDouble(3))
     assert(ts == 1.0, s"Theil-Sen should ignore the outlier, got $ts")
   }
 
   test("corpus: same nations and month counts as theil_sen_trend; fits defined everywhere") {
     val o = Temporal.olsTrend(spark, sf).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.isNullAt(2), r.isNullAt(3)))).toMap
-    val t = Temporal.theilSenTrend(spark, sf, materialize = false).collect()
+    val t = Share.lineage(Temporal.theilSenTrend(spark, sf).collect())
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(o.keySet == t.keySet)
     o.foreach { case (n, (months, slopeNull, rNull)) =>
