@@ -1,11 +1,14 @@
 package graft
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 object Bench {
+
+  private val mapper = new ObjectMapper()
 
   /** Per-query retry priors (primary stage, sf1 stage) from the text of
     * a previous run's `bench_last.json`; none when that run's `sf`
@@ -22,7 +25,7 @@ object Bench {
     * that legitimately got slower retries once per run against its
     * stale floor — one bounded min-of-2, not a wrong number. */
   def priors(text: String, sfDir: String, cpus: Int): (Map[String, Double], Map[String, Double]) = {
-    val root = new ObjectMapper().readTree(text)
+    val root = mapper.readTree(text)
     def section(label: String): Map[String, Double] =
       root.path(label).properties().asScala
         .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
@@ -44,10 +47,14 @@ object Bench {
     * `"sf1_error":"<class>: <message>"` key in their place: a failed
     * ScaleUp, or the refusal to scale a corpus into itself, shows in
     * the record instead of as missing keys. */
-  def sf1Stage(keys: => String): String =
+  def sf1Stage(keys: => ObjectNode): ObjectNode =
     try keys catch {
-      case e: Throwable => ",\"sf1_error\":" + new ObjectMapper().writeValueAsString(reason(e))
+      case e: Throwable => mapper.createObjectNode().put("sf1_error", reason(e))
     }
+
+  /** `m` as one JSON object, keys sorted. */
+  private def sorted(m: collection.Map[String, _]): JsonNode =
+    mapper.valueToTree[JsonNode](new java.util.TreeMap(m.asJava))
 
   /** One full evaluation of query `name` over `dir` (see
     * Harness.timed): its seconds, or -1.0 on failure, whose reason then
@@ -59,12 +66,26 @@ object Bench {
       case Left(e) => errors(name) = reason(e); -1.0
     }
 
-  /** The `"<key>":{query: reason}` entry of a stage's failed runs,
-    * sorted by query; nothing when no run failed. A query whose retry alone
-    * failed keeps its valid first reading and still has an entry. */
-  def errorsJson(key: String, errors: collection.Map[String, String]): String =
-    if (errors.isEmpty) ""
-    else s""","$key":""" + new ObjectMapper().writeValueAsString(new java.util.TreeMap(errors.asJava))
+  /** The record's primary-stage keys: the total over `results`, the
+    * readings and their floor, the sf dir, and the host they come from
+    * (cores, JVM, max heap, calibration probe). */
+  def record(sfDir: String, cpus: Int, results: Map[String, Double],
+      floor: Map[String, Double], calibSec: Double): ObjectNode = {
+    val host = mapper.createObjectNode()
+      .put("jvm", s"${System.getProperty("java.vm.name")} ${System.getProperty("java.version")}")
+      .put("heap_mb", Runtime.getRuntime.maxMemory() / (1024 * 1024))
+    mapper.createObjectNode().put("metric", "total").put("value", results.values.sum)
+      .put("unit", "sec").set[ObjectNode]("queries", sorted(results))
+      .put("sf", sfDir).put("cpus", cpus).set[ObjectNode]("host", host)
+      .put("calib_sec", calibSec).set[ObjectNode]("queries_floor", sorted(floor))
+  }
+
+  /** Puts `m` under `key`, keys sorted, unless `m` is empty: a
+    * stage's failed runs (query -> reason) or its retried readings. A
+    * query whose retry alone failed keeps its valid first reading and
+    * still has an errors entry. */
+  def putNonEmpty(record: ObjectNode, key: String, m: collection.Map[String, _]): ObjectNode =
+    if (m.isEmpty) record else record.set[ObjectNode](key, sorted(m))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -195,18 +216,12 @@ object Bench {
       }.toMap
       (results, retried)
     }
-    def toJson(m: Map[String, Double]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
     // rolling per-query floor (see Bench.priors)
     def floorOf(results: Map[String, Double], prior: Map[String, Double]): Map[String, Double] =
       results.collect { case (k, v) if v > 0 => k -> math.min(v, prior.getOrElse(k, v)) }
-    def retriedJson(key: String, retried: Map[String, Double]): String =
-      if (retried.isEmpty) "" else s""","$key":${toJson(retried)}"""
 
     val calibSec = calibrate()
     val (results, retried) = stage(sfDir, priorsSf, benchOrder, errors)(minOf2(sfDir, errors))
-    val total = if (results.nonEmpty) results.values.sum else 0.0
 
     // Second scale factor (VERDICT r01 #9): derive a 10x corpus from
     // sfDir (ScaleUp — deterministic key-remapped replication) and run
@@ -215,8 +230,8 @@ object Bench {
     // cache) keep the added wall-clock bounded; the primary metric and
     // per-query keys stay untouched for round-over-round comparison.
     // Disable with SPARK_GRAFT_SF1=0.
-    val sf1Extra: String =
-      if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") == "0") ""
+    val sf1Keys: ObjectNode =
+      if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") == "0") mapper.createObjectNode()
       else sf1Stage {
         val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/bench-sf1")
         // benching the 10x corpus directly (SF_DIR == SF1_DIR) must not
@@ -255,10 +270,15 @@ object Bench {
           if (t1 < 1.0) t1
           else { val t2 = time(spark, sf1Dir, n, fn, sf1Errors); if (t2 < 0) t1 else math.min(t1, t2) }
         }
-        s""","sf1_queries":${toJson(r1)},"sf1_total":${r1.values.filter(_ > 0).sum},"sf1_factor":10,"calib_sf1_sec":$calibSf1,"sf1_floor":${toJson(floorOf(r1, priorsSf1))}${retriedJson("sf1_retried", sf1Retried)}${errorsJson("sf1_errors", sf1Errors)}"""
+        val keys = mapper.createObjectNode().set[ObjectNode]("sf1_queries", sorted(r1))
+          .put("sf1_total", r1.values.filter(_ > 0).sum).put("sf1_factor", 10)
+          .put("calib_sf1_sec", calibSf1).set[ObjectNode]("sf1_floor", sorted(floorOf(r1, priorsSf1)))
+        putNonEmpty(putNonEmpty(keys, "sf1_retried", sf1Retried), "sf1_errors", sf1Errors)
       }
 
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)},"sf":"$sfDir","cpus":$cpus,"calib_sec":$calibSec,"queries_floor":${toJson(floorOf(results, priorsSf))}$sf1Extra${retriedJson("retried", retried)}${errorsJson("errors", errors)}}"""
+    val line = mapper.writeValueAsString(putNonEmpty(putNonEmpty(
+      record(sfDir, cpus, results, floorOf(results, priorsSf), calibSec).setAll[ObjectNode](sf1Keys),
+      "retried", retried), "errors", errors))
     println(line)
     // the full-precision record the NEXT run's retry pass compares
     // against (BENCH_r*.json keeps only a stdout tail); committed per

@@ -1,8 +1,9 @@
 package graft.etl
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths, Path}
-import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
+import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
 /** The side-effecting acquisition/publication edges (SURVEY.md §2.1
@@ -106,7 +107,6 @@ object Acquisition {
     * (`foo.json.gz` alongside `foo.json`). docs/DIVERGENCES.md #7a.
     */
   def publishDirectory(outDir: Path, prefix: String, publisher: Publisher): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     val files = Files.walk(outDir).iterator().asScala
       .filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString)
     files.map { p =>
@@ -126,26 +126,27 @@ object Acquisition {
     }
   }
 
-  // -- minimal JSON for the cache envelope (no JSON library on the CP) --
-
+  /** The S5 cache envelope, `{"data": {"<year>": {"year": y,
+    * "source_url": ..., "data_url": ...}}}` (reference assets.py:182-189).
+    */
   private def writeCache(file: Path, mapping: Map[Int, UrlEntry]): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val entries = mapping.toSeq.sortBy(_._1).map { case (y, e) =>
-      s"""${q(y.toString)}: {"year": $y, "source_url": ${q(e.sourceUrl)}, "data_url": ${q(e.dataUrl)}}"""
-    }.mkString(", ")
-    Files.write(file, s"""{"data": {$entries}}""".getBytes(StandardCharsets.UTF_8))
+    val mapper = new ObjectMapper()
+    val root = mapper.createObjectNode()
+    val data = root.putObject("data")
+    mapping.toSeq.sortBy(_._1).foreach { case (y, e) =>
+      data.putObject(y.toString).put("year", y)
+        .put("source_url", e.sourceUrl).put("data_url", e.dataUrl)
+    }
+    mapper.writeValue(file.toFile, root)
   }
 
-  private val entryRe: Regex =
-    """"(\d{4})"\s*:\s*\{\s*"year"\s*:\s*(\d+)\s*,\s*"source_url"\s*:\s*"((?:[^"\\]|\\.)*)"\s*,\s*"data_url"\s*:\s*"((?:[^"\\]|\\.)*)"\s*\}""".r
-
-  private def readCache(file: Path): Option[Map[Int, UrlEntry]] = {
-    val text = new String(Files.readAllBytes(file), StandardCharsets.UTF_8)
-    if (!text.contains("\"data\"")) return None
-    val unesc = (s: String) => s.replace("\\\"", "\"").replace("\\\\", "\\")
-    val m = entryRe.findAllMatchIn(text).map { mm =>
-      mm.group(1).toInt -> UrlEntry(mm.group(2).toInt, unesc(mm.group(3)), unesc(mm.group(4)))
-    }.toMap
-    Some(m)
-  }
+  /** None when the file is not JSON or has no `data` object; an
+    * entry without a 4-digit key, an int year and both URLs is skipped. */
+  private def readCache(file: Path): Option[Map[Int, UrlEntry]] =
+    scala.util.Try(new ObjectMapper().readTree(file.toFile).path("data")).toOption
+      .filter(_.isObject).map(_.properties().asScala.map(e => e.getKey -> e.getValue).collect {
+        case (y, v) if y.matches("\\d{4}") && v.path("year").isInt &&
+            v.path("source_url").isTextual && v.path("data_url").isTextual =>
+          y.toInt -> UrlEntry(v.get("year").asInt, v.get("source_url").asText, v.get("data_url").asText)
+      }.toMap)
 }

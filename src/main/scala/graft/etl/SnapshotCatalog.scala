@@ -2,8 +2,15 @@ package graft.etl
 
 import graft.ParquetSchemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.core.{JsonGenerator, StreamWriteFeature}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.core.util.{DefaultIndenter, DefaultPrettyPrinter, Separators}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Atomic MULTI-TABLE snapshot commits — the piece between a
   * one-table pointer swap and a transactional table format (VERDICT
@@ -315,11 +322,9 @@ class SnapshotCatalog(catalogDir: String, segFold: Int = 64,
       // CAS retry like everything else).
       val merged = base ++ tableVals ++ extras +
         ("_ts" -> System.currentTimeMillis().toString)
-      val body = merged.toSeq.sortBy(_._1)
-        .map { case (n, u) => s"""  "$n": "$u"""" }
-        .mkString("{\n", ",\n", "\n}")
       val tmp = Files.createTempFile(dir.resolve("_manifests"), "m", ".tmp")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+      Files.write(tmp, SnapshotCatalog.Layout.writeValueAsBytes(
+        new java.util.TreeMap(merged.asJava))) // keys sorted
       try {
         Files.createLink(manifestPath(k), tmp)
         Files.delete(tmp)
@@ -374,15 +379,9 @@ class SnapshotCatalog(catalogDir: String, segFold: Int = 64,
   }
 
   /** table -> version-dir map of manifest k (immutable once linked). */
-  def manifest(k: Int): Map[String, String] = {
-    val raw = new String(Files.readAllBytes(manifestPath(k)),
-      StandardCharsets.UTF_8)
-    raw.split('\n').flatMap { line =>
-      val t = line.trim.stripSuffix(",")
-      """"([^"]+)":\s*"([^"]+)"""".r.findFirstMatchIn(t)
-        .map(g => g.group(1) -> g.group(2))
-    }.toMap
-  }
+  def manifest(k: Int): Map[String, String] =
+    SnapshotCatalog.entries(SnapshotCatalog.Json.readTree(
+      Files.readAllBytes(manifestPath(k)))).map { case (key, v) => key -> v.asText }.toMap
 
   /** A pinned read transaction: resolves the newest manifest ONCE;
     * every table read through it comes from the same snapshot. */
@@ -1441,31 +1440,66 @@ object SnapshotCatalog {
     }
   }
 
+  /** The catalog's one JSON codec, for manifests and sidecars alike.
+    * Numbers read as exact BigDecimals (a stat bound keeps every digit
+    * and its scale), decimals write in plain notation, and control
+    * characters read raw: manifests written before this codec carry
+    * their keys unescaped. */
+  private[etl] val Json: JsonMapper = JsonMapper.builder()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .disable(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES)
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN)
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .build()
+  /** The catalog's file layout: one object entry per line, so a
+    * manifest reads one `"key": "value"` per line; arrays stay inline. */
+  private val Layout = Json.writer(new DefaultPrettyPrinter()
+    .withObjectIndenter(new DefaultIndenter("  ", "\n"))
+    .withSeparators(Separators.createDefaultInstance()
+      .withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
+
+  /** A JSON object's entries, in document order. */
+  private def entries(n: JsonNode): Iterator[(String, JsonNode)] =
+    n.properties().asScala.iterator.map(e => e.getKey -> e.getValue)
+
   private[etl] val StatsFileName = "_graft_stats.json"
   private[etl] val StatsFragDir = "_graft_stats.d"
 
-  /** One file's stats sidecar line from an agg row laid out as
-    * (f, mn_0, mx_0, n_0, mn_1, ...). Shared by the driver-written
-    * single-document path and the executor-written fragment path.
-    * Non-finite float bounds (NaN sorts greatest in Spark, so one NaN
-    * row poisons max) have no order semantics a pruner can use: store
-    * NULL bounds but KEEP the true non-null count — pruneFiles keeps
-    * the file conservatively, and countPruned scans it (count > 0
-    * with NULL bounds = "has values, bounds unusable"). */
-  private def statsLine(cols: Seq[String],
-      r: org.apache.spark.sql.Row): (String, String) = {
+  /** One file's stats sidecar entry, `"<file>": {"<col>": [min, max,
+    * n], ...}`, from an agg row laid out as (f, mn_0, mx_0, n_0, mn_1,
+    * ...); a zero-row file (`r` = None) gets NULL bounds and a zero
+    * count. Shared by the driver-written single-document path and the
+    * executor-written fragment path. Non-finite float bounds (NaN
+    * sorts greatest in Spark, so one NaN row poisons max) have no
+    * order semantics a pruner can use: store NULL bounds but KEEP the
+    * true non-null count — pruneFiles keeps the file conservatively,
+    * and countPruned scans it (count > 0 with NULL bounds = "has
+    * values, bounds unusable"). */
+  private def writeStatsEntry(g: JsonGenerator, fname: String,
+      cols: Seq[String], r: Option[org.apache.spark.sql.Row]): Unit = {
     def finite(v: Any): Any = v match {
       case d: java.lang.Double if d.isNaN || d.isInfinite => null
       case f: java.lang.Float if f.isNaN || f.isInfinite => null
       case other => other
     }
-    val fname = r.getString(0).split('/').last
-    val entries = cols.zipWithIndex.map { case (c, i) =>
-      val (mn, mx) = (finite(r.get(1 + 3 * i)), finite(r.get(2 + 3 * i)))
-      val (emn, emx) = if (mn == null || mx == null) (null, null) else (mn, mx)
-      s"${jq(c)}: [${encStat(emn)}, ${encStat(emx)}, ${r.getLong(3 + 3 * i)}]"
-    }.mkString(", ")
-    fname -> s"  ${jq(fname)}: {$entries}"
+    g.writeObjectFieldStart(fname)
+    cols.zipWithIndex.foreach { case (c, i) =>
+      val (mn, mx) = r.fold[(Any, Any)]((null, null))(r =>
+        (finite(r.get(1 + 3 * i)), finite(r.get(2 + 3 * i))))
+      g.writeArrayFieldStart(c)
+      if (mn == null || mx == null) { g.writeNull(); g.writeNull() }
+      else { g.writeObject(mn); g.writeObject(mx) }
+      g.writeNumber(r.fold(0L)(_.getLong(3 + 3 * i)))
+      g.writeEndArray()
+    }
+    g.writeEndObject()
+  }
+
+  /** One sidecar document, `{<entries>}`, written to `p`. */
+  private def writeDoc(p: java.nio.file.Path)(entries: JsonGenerator => Unit): Unit = {
+    val g = Layout.createGenerator(Files.newOutputStream(p))
+    try { g.writeStartObject(); entries(g); g.writeEndObject() }
+    finally g.close()
   }
 
   /** Atomically publish one sidecar fragment from an executor task:
@@ -1473,13 +1507,13 @@ object SnapshotCatalog {
     * so a retried task republishes identical content instead of
     * corrupting or duplicating (on an object store this is the
     * conditional-PUT of an Iceberg manifest fragment). */
-  private def writeFragment(dirStr: String, fragDir: String,
-      body: String): Unit = {
+  private def writeFragment(dirStr: String, fragDir: String)(
+      entries: JsonGenerator => Unit): Unit = {
     val outDir = Paths.get(dirStr, fragDir)
     Files.createDirectories(outDir)
     val pid = org.apache.spark.TaskContext.getPartitionId()
     val tmp = Files.createTempFile(outDir, "frag", ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    writeDoc(tmp)(entries)
     Files.move(tmp, outDir.resolve(f"part-$pid%05d.json"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -1531,85 +1565,68 @@ object SnapshotCatalog {
     // disk; the sidecar must stay TOTAL over data files (readers abort
     // on a coverage gap), so it gets an all-NULL-bounds entry — the
     // conservative always-keep shape, same as an all-null column
-    val nullEntry = cols.map(c => s"${jq(c)}: [null, null, 0]").mkString(", ")
+    def fname(r: org.apache.spark.sql.Row) = r.getString(0).split('/').last
     if (onDisk.size <= frag) {
-      val rows = agg.collect()
-      val profiled = rows.map(_.getString(0).split('/').last).toSet
-      val emptyFiles = onDisk.filterNot(profiled)
-        .map(f => f -> s"  ${jq(f)}: {$nullEntry}")
-      val body = (rows.map(statsLine(cols, _)) ++ emptyFiles)
-        .sortBy(_._1).map(_._2).mkString("{\n", ",\n", "\n}")
-      Files.write(Paths.get(dir, StatsFileName),
-        body.getBytes(StandardCharsets.UTF_8))
+      val rows = agg.collect().map(r => fname(r) -> Option(r)).toMap
+      writeDoc(Paths.get(dir, StatsFileName))(g =>
+        (onDisk.toSet ++ rows.keySet).toSeq.sorted.foreach(f =>
+          writeStatsEntry(g, f, cols, rows.getOrElse(f, None))))
     } else {
       val nFrags = (onDisk.size + frag - 1) / frag
       val dirStr = dir
       val colsB = cols
       agg.repartitionByRange(nFrags, col("f")).sortWithinPartitions("f")
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          val lines = it.map(r => statsLine(colsB, r)._2).toSeq
-          if (lines.nonEmpty)
-            writeFragment(dirStr, StatsFragDir,
-              lines.mkString("{\n", ",\n", "\n}"))
+          if (it.hasNext) writeFragment(dirStr, StatsFragDir)(g =>
+            it.foreach(r => writeStatsEntry(g, fname(r), colsB, Some(r))))
         }
       // zero-row files backfilled by ONE driver-written fragment: the
       // fragment set on disk is the profiled census, so no extra scan
       val profiled = parseStatsFile(dir).map(_.keySet).getOrElse(Set.empty)
       val empties = onDisk.filterNot(profiled).sorted
-        .map(f => s"  ${jq(f)}: {$nullEntry}")
       if (empties.nonEmpty) {
         // createDirectories here too: if EVERY data file is zero-row,
         // no executor task ran writeFragment, so the .d dir may not
         // exist yet (round-12 review)
         Files.createDirectories(Paths.get(dir, StatsFragDir))
-        val p = Paths.get(dir, StatsFragDir, "part-empty.json")
-        Files.write(p, empties.mkString("{\n", ",\n", "\n}")
-          .getBytes(StandardCharsets.UTF_8))
+        writeDoc(Paths.get(dir, StatsFragDir, "part-empty.json"))(g =>
+          empties.foreach(writeStatsEntry(g, _, cols, None)))
       }
     }
   }
 
-  /** The sidecar texts for `dir`, whichever layout it uses: the
-    * single driver-written document, or every fragment under the
-    * executor-written `.d` directory. None = no sidecar at all. */
-  private def sidecarTexts(dir: String, fileName: String,
-      fragDirName: String): Option[Seq[String]] = {
-    val p = Paths.get(dir, fileName)
-    if (Files.exists(p))
-      return Some(Seq(new String(Files.readAllBytes(p),
-        StandardCharsets.UTF_8)))
-    val d = Paths.get(dir, fragDirName)
-    if (!Files.isDirectory(d)) return None
-    val frags = Option(d.toFile.listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".json")).sortBy(_.getName)
-    Some(frags.map(f => new String(
-      Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
+  /** The sidecar entries for `dir`, whichever layout it uses: the
+    * single driver-written document, or the union of the fragments
+    * under the executor-written `.d` directory; file -> column -> the
+    * column's array. None = no sidecar at all. */
+  private def sidecarEntries(dir: String, fileName: String,
+      fragDirName: String): Option[Map[String, Map[String, JsonNode]]] = {
+    val (p, d) = (Paths.get(dir, fileName), Paths.get(dir, fragDirName))
+    val docs =
+      if (Files.exists(p)) Seq(p)
+      else if (Files.isDirectory(d)) Option(d.toFile.listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".json")).sortBy(_.getName).map(_.toPath)
+      else return None
+    Some(docs.iterator.flatMap(f => entries(Json.readTree(Files.readAllBytes(f))))
+      .map { case (f, cols) => f -> entries(cols).toMap }.toMap)
   }
 
   /** ONE parse of the sidecar serving both views:
     * file -> column -> (Some((min, max)) | None for NULL bounds,
     * non-null value count). None at the top level = no sidecar.
     * Reads the single-document layout or the union of executor-written
-    * fragments — entry format is identical line-for-line. */
+    * fragments. A number reads as its exact BigDecimal, a string as
+    * itself. */
   private[etl] def parseStatsFile(dir: String)
       : Option[Map[String, Map[String, (Option[(Any, Any)], Long)]]] = {
-    val texts = sidecarTexts(dir, StatsFileName, StatsFragDir)
-      .getOrElse(return None)
-    val FileLine = """^\s*"([^"]*)":\s*\{(.*)\}\s*,?\s*$""".r
-    val ColEntry = ("\"([^\"]*)\": \\[" + StatToken + ", " + StatToken +
-      ", (\\d+)\\]").r
-    val m = texts.flatMap(_.split('\n')).flatMap {
-      case FileLine(f, body) =>
-        val colsMap = ColEntry.findAllMatchIn(body).map { g =>
-          val (mn, mx) = (decStat(g.group(2)), decStat(g.group(3)))
-          junesc(g.group(1)) ->
-            ((if (mn == null || mx == null) None else Some((mn, mx))),
-              g.group(4).toLong)
-        }.toMap
-        Some(junesc(f) -> colsMap)
-      case _ => None
-    }.toMap
-    Some(m)
+    def stat(n: JsonNode): Any =
+      if (n.isNull) null else if (n.isTextual) n.asText else BigDecimal(n.decimalValue)
+    sidecarEntries(dir, StatsFileName, StatsFragDir).map(_.map { case (f, cols) =>
+      f -> cols.map { case (c, a) =>
+        val (mn, mx) = (stat(a.get(0)), stat(a.get(1)))
+        c -> ((if (mn == null || mx == null) None else Some((mn, mx))), a.get(2).asLong)
+      }
+    })
   }
 
   /** file -> column -> Some((min, max)) | None (NULL bounds). */
@@ -1722,27 +1739,34 @@ object SnapshotCatalog {
     }
     val onDisk = Option(new java.io.File(dir).listFiles()).toSeq.flatten
       .map(_.getName).count(_.endsWith(".parquet"))
-    if (onDisk <= frag) {
-      val perCol = cols.map { c =>
-        val words = wordsOf(c).collect()
-        c -> words.groupBy(_.getString(0)).map { case (f, rows) =>
-          val m = rows.head.getLong(1)
-          f.split('/').last -> (m, rows.map(r => (r.getLong(2), r.getLong(3))))
+    // rows (f, m, w, bits, c) sorted by (f, c, w) stream into
+    // `"<file>": {"<col>": [m, w, bits, ...], ...}` entries
+    def writeEntries(g: JsonGenerator, it: Iterator[org.apache.spark.sql.Row]): Unit = {
+      var curF: String = null
+      var curC: String = null
+      it.foreach { r =>
+        val fname = r.getString(0).split('/').last
+        if (fname != curF) {
+          if (curF != null) { g.writeEndArray(); g.writeEndObject() }
+          g.writeObjectFieldStart(fname)
+          curF = fname; curC = null
         }
+        if (r.getString(4) != curC) {
+          if (curC != null) g.writeEndArray()
+          curC = r.getString(4)
+          g.writeArrayFieldStart(curC)
+          g.writeNumber(r.getLong(1))
+        }
+        g.writeNumber(r.getLong(2)); g.writeNumber(r.getLong(3))
       }
-      val files = perCol.flatMap(_._2.keys).distinct.sorted
-      val body = files.map { f =>
-        val entries = perCol.flatMap { case (c, byFile) =>
-          byFile.get(f).map { case (m, ws) =>
-            val flat = (Seq(m) ++ ws.sortBy(_._1).flatMap(w => Seq(w._1, w._2)))
-              .mkString(", ")
-            s"${jq(c)}: [$flat]"
-          }
-        }.mkString(", ")
-        s"  ${jq(f)}: {$entries}"
-      }.mkString("{\n", ",\n", "\n}")
-      Files.write(Paths.get(dir, BloomFileName),
-        body.getBytes(StandardCharsets.UTF_8))
+      if (curF != null) { g.writeEndArray(); g.writeEndObject() }
+    }
+    val unioned = cols.map(c => wordsOf(c).withColumn("c", lit(c)))
+      .reduce(_.unionByName(_))
+    if (onDisk <= frag) {
+      val rows = unioned.collect()
+        .sortBy(r => (r.getString(0), r.getString(4), r.getLong(2)))
+      writeDoc(Paths.get(dir, BloomFileName))(writeEntries(_, rows.iterator))
     } else {
       // FRAGMENTED path (VERDICT r11 "What's missing" #1): beyond
       // `frag` data files the (file, word) rows never reach the
@@ -1751,36 +1775,12 @@ object SnapshotCatalog {
       // task streams its fragment straight to `_graft_bloom.d/`. The
       // r10 cap bounded driver traffic to n_files x 256 KiB; this
       // removes the driver from the body path entirely.
-      val unioned = cols.map(c => wordsOf(c).withColumn("c", lit(c)))
-        .reduce(_.unionByName(_))
       val nFrags = (onDisk + frag - 1) / frag
       val dirStr = dir
       unioned.repartitionByRange(nFrags, col("f"))
         .sortWithinPartitions(col("f"), col("c"), col("w"))
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          if (it.hasNext) {
-            val sb = new StringBuilder("{\n")
-            var curF: String = null
-            var curC: String = null
-            it.foreach { r =>
-              val fname = r.getString(0).split('/').last
-              val (m, w, bits, c) =
-                (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
-              if (fname != curF) {
-                if (curF != null) sb.append("]},\n")
-                sb.append("  ").append(jq(fname)).append(": {")
-                curF = fname; curC = null
-              }
-              if (c != curC) {
-                if (curC != null) sb.append("], ")
-                sb.append(jq(c)).append(": [").append(m)
-                curC = c
-              }
-              sb.append(", ").append(w).append(", ").append(bits)
-            }
-            sb.append("]}\n}")
-            writeFragment(dirStr, BloomFragDir, sb.toString)
-          }
+          if (it.hasNext) writeFragment(dirStr, BloomFragDir)(writeEntries(_, it))
         }
     }
   }
@@ -1792,56 +1792,13 @@ object SnapshotCatalog {
     * [[SnapshotCatalog.Snapshot.pruneFilesPoint]] — Bloom coverage may
     * be partial without correctness risk (one-sided error). */
   private[etl] def readFileBlooms(dir: String)
-      : Option[Map[String, Map[String, (Long, Map[Int, Long])]]] = {
-    val texts = sidecarTexts(dir, BloomFileName, BloomFragDir)
-      .getOrElse(return None)
-    val FileLine = """^\s*"([^"]*)":\s*\{(.*)\}\s*,?\s*$""".r
-    val ColEntry = """"([^"]*)": \[([-0-9, ]*)\]""".r
-    val m = texts.flatMap(_.split('\n')).flatMap {
-      case FileLine(f, bodyStr) =>
-        val colsMap = ColEntry.findAllMatchIn(bodyStr).map { g =>
-          val nums = g.group(2).split(',').map(_.trim).filter(_.nonEmpty)
-            .map(_.toLong)
-          val words = nums.drop(1).grouped(2)
-            .collect { case Array(i, w) => i.toInt -> w }.toMap
-          junesc(g.group(1)) -> (nums.head, words)
-        }.toMap
-        Some(junesc(f) -> colsMap)
-      case _ => None
-    }.toMap
-    Some(m)
-  }
-
-  // ---- stats value codec: a JSON subset where EVERY character outside
-  // a conservative safe set (no quote, no backslash) is a \uXXXX
-  // escape, so quoted tokens never contain raw quotes and the reader
-  // needs no full JSON parser ----
-  private val StatToken = """("[^"]*"|null|[-+0-9.eE]+)"""
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case c if c >= ' ' && c <= '~' && c != '"' && c != '\\' => c.toString
-    case c => f"\\u${c.toInt}%04x"
-  } + "\""
-  private def junesc(s: String): String =
-    """\\u([0-9a-fA-F]{4})""".r.replaceAllIn(s,
-      // quoteReplacement: a decoded '\' (jq escapes backslash to
-      // \) would otherwise be read by appendReplacement as an
-      // escape prefix and throw, poisoning every read of the sidecar
-      g => java.util.regex.Matcher.quoteReplacement(
-        Integer.parseInt(g.group(1), 16).toChar.toString))
-  private def encStat(v: Any): String = v match {
-    case null => "null"
-    case s: String => jq(s)
-    case n: java.math.BigDecimal => n.toPlainString
-    case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
-              _: java.lang.Long | _: java.lang.Float | _: java.lang.Double) =>
-      n.toString
-    case other => throw new IllegalArgumentException(
-      s"unsupported stats value: $other (${other.getClass})")
-  }
-  private def decStat(tok: String): Any =
-    if (tok == "null") null
-    else if (tok.startsWith("\"")) junesc(tok.substring(1, tok.length - 1))
-    else BigDecimal(tok)
+      : Option[Map[String, Map[String, (Long, Map[Int, Long])]]] =
+    sidecarEntries(dir, BloomFileName, BloomFragDir).map(_.map { case (f, cols) =>
+      f -> cols.map { case (c, a) =>
+        val nums = a.elements().asScala.map(_.asLong).toSeq
+        c -> (nums.head, nums.tail.grouped(2).map(w => w(0).toInt -> w(1)).toMap)
+      }
+    })
 
   /** Compare strings in UTF-8 BINARY order — the collation Spark's
     * UTF8String min/max aggregates (and DuckDB's default BINARY) use.
@@ -1862,19 +1819,21 @@ object SnapshotCatalog {
     x.length < y.length
   }
 
+  /** A numeric bound as a BigDecimal, whatever its physical width. */
+  private def bd(v: Any): BigDecimal = v match {
+    case b: BigDecimal => b
+    case b: java.math.BigDecimal => BigDecimal(b)
+    case n: Number => BigDecimal(n.toString)
+    case other => throw new IllegalArgumentException(
+      s"numeric bound expected, got $other (${other.getClass})")
+  }
+
   /** Numeric-or-string range disjointness for pruning: true iff
     * [mn, mx] provably misses [lo, hi]. Numbers compare through
     * BigDecimal regardless of physical width; strings compare in
     * UTF-8 binary order (both bounds must then be strings — a kind
     * mismatch fails loudly rather than mis-pruning). */
   private[etl] def rangeDisjoint(mn: Any, mx: Any, lo: Any, hi: Any): Boolean = {
-    def bd(v: Any): BigDecimal = v match {
-      case b: BigDecimal => b
-      case b: java.math.BigDecimal => BigDecimal(b)
-      case n: Number => BigDecimal(n.toString)
-      case other => throw new IllegalArgumentException(
-        s"numeric bound expected, got $other (${other.getClass})")
-    }
     (mn, lo) match {
       case (_: String, _) | (_, _: String) =>
         (mn, mx, lo, hi) match {
@@ -1891,13 +1850,6 @@ object SnapshotCatalog {
     * file holds matches the probe (the metadata-only-count admission
     * test). Same kind rules as [[rangeDisjoint]]. */
   private[etl] def rangeContained(mn: Any, mx: Any, lo: Any, hi: Any): Boolean = {
-    def bd(v: Any): BigDecimal = v match {
-      case b: BigDecimal => b
-      case b: java.math.BigDecimal => BigDecimal(b)
-      case n: Number => BigDecimal(n.toString)
-      case other => throw new IllegalArgumentException(
-        s"numeric bound expected, got $other (${other.getClass})")
-    }
     (mn, lo) match {
       case (_: String, _) | (_, _: String) =>
         (mn, mx, lo, hi) match {

@@ -1,10 +1,12 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import scala.jdk.CollectionConverters._
 
 /** `Bench.priors`: the retry priors read from a previous run's
   * `bench_last.json`, keyed on its sf dir and core count;
+  * `Bench.record`: the primary keys, whatever the sf dir's characters;
   * `Bench.sf1Stage` and `Bench.time`: a failed sf1 stage, and a failed
   * query, leave their reasons in the record. */
 class BenchSpec extends SparkTestBase {
@@ -44,14 +46,28 @@ class BenchSpec extends SparkTestBase {
     assert(keys.nonEmpty && keys.subsetOf(p.keySet))
   }
 
+  /** `keys` in the record text Bench prints, and that text parsed back. */
+  def text(keys: ObjectNode): String = new ObjectMapper().writeValueAsString(
+    new ObjectMapper().createObjectNode().put("metric", "total").setAll[ObjectNode](keys))
+  def reparsed(keys: ObjectNode) = new ObjectMapper().readTree(text(keys))
+
+  test("a record for an sf dir holding a quote and a backslash parses, and priors returns it") {
+    val dir = "/data/sf \"0.1\"\\x"
+    val keys = Bench.record(dir, 4, Map("a" -> 2.0, "b" -> 0.5), Map("a" -> 1.5), 0.8)
+    val record = reparsed(keys)
+    assert(record.get("sf").asText == dir && record.get("value").asDouble == 2.5)
+    assert(record.get("host").get("heap_mb").asLong > 0 && record.get("host").has("jvm"))
+    assert(Bench.priors(text(keys), dir, 4) == ((Map("a" -> 1.5, "b" -> 0.5), Map.empty)))
+  }
+
   test("a failed sf1 stage records its error class and message") {
-    def record(extra: String) = new ObjectMapper().readTree(s"""{"metric":"total"$extra}""")
-    assert(record(Bench.sf1Stage(""","sf1_total":1.5""")).get("sf1_total").asDouble == 1.5)
-    val failed = record(Bench.sf1Stage(throw new IllegalStateException("no \"corpus\" here")))
+    assert(reparsed(Bench.sf1Stage(new ObjectMapper().createObjectNode().put("sf1_total", 1.5)))
+      .get("sf1_total").asDouble == 1.5)
+    val failed = reparsed(Bench.sf1Stage(throw new IllegalStateException("no \"corpus\" here")))
     assert(failed.get("sf1_error").asText == "java.lang.IllegalStateException: no \"corpus\" here")
     // ScaleUp's refusal to scale a corpus into itself, before any Spark work
     val dir = java.nio.file.Files.createTempDirectory("bench_sf1").toString
-    val refused = record(Bench.sf1Stage { ScaleUp.ensure(null, dir, dir, 10); "" })
+    val refused = reparsed(Bench.sf1Stage { ScaleUp.ensure(null, dir, dir, 10); new ObjectMapper().createObjectNode() })
     assert(refused.get("sf1_error").asText.startsWith(
       "java.lang.IllegalArgumentException: requirement failed: ScaleUp src == dst"))
   }
@@ -64,8 +80,9 @@ class BenchSpec extends SparkTestBase {
     assert(errors == Map("boom" -> "java.lang.IllegalStateException: no \"rows\" here"))
     assert(Bench.time(spark, sf, "ok", (s, _) => s.range(3).toDF(), errors) >= 0)
     assert(errors.keySet == Set("boom"))
-    val record = new ObjectMapper().readTree(s"""{"metric":"total"${Bench.errorsJson("errors", errors)}}""")
+    val record = reparsed(Bench.putNonEmpty(new ObjectMapper().createObjectNode(), "errors", errors))
     assert(record.get("errors").get("boom").asText == "java.lang.IllegalStateException: no \"rows\" here")
-    assert(Bench.errorsJson("errors", Map.empty) == "")
+    assert(reparsed(Bench.putNonEmpty(new ObjectMapper().createObjectNode(), "errors", Map.empty)) ==
+      reparsed(new ObjectMapper().createObjectNode()))
   }
 }

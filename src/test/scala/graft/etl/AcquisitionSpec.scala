@@ -42,6 +42,13 @@ class AcquisitionSpec extends AnyFunSuite {
     val m2 = scrapeUrlMapping(cache, fetch, 2003, 2006)
     assert(fetches == before)
     assert(m2 == m)
+    // a standard writer's cache: `\/` and `\uXXXX` escapes (ujson and
+    // pandas escape `/`), keys in another order; read with no fetches
+    Files.write(cache, ("{\"data\": {\"2004\": {\"data_url\": \"https:\\/\\/x\\/a b.xls\", " +
+      "\"source_url\": \"https:\\/\\/s\\/2004\\u00e9\", \"year\": 2004}}}").getBytes("UTF-8"))
+    assert(scrapeUrlMapping(cache, fetch, 2003, 2006) ==
+      Map(2004 -> UrlEntry(2004, "https://s/2004é", "https://x/a b.xls")))
+    assert(fetches == before)
   }
 
   test("downloadYears: extension detection, cache skip, failure isolation") {
